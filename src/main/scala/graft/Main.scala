@@ -90,33 +90,20 @@ object Main {
       KgPipeline.links(spark, mentions)
     }
 
-    if (canon) {
+    val canonMap = if (canon) Some(
       Manifest.runStage(spark, warehouse, "canon_map", Seq.empty, corpusFp) {
         KgPipeline.canonMap(spark, links)
-      }
-    }
+      }) else None
 
+    // The GLOBAL distinct (the default, not assumeUniqueDocs) deliberately:
+    // `links` here is the COMMITTED snapshot, and a committed file
+    // re-splits on read (maxPartitionBytes), so one document's duplicate
+    // rows can span read partitions — the co-partitioned-duplicates
+    // contract LocalDistinct needs does not hold on snapshot reads, only
+    // on the in-memory narrow lineage.
     val triples = Manifest.runStage(spark, warehouse, "triples",
       Seq("repo", "lang"), corpusFp) {
-      val resolved = if (canon) {
-        val cm = spark.read.parquet(s"$warehouse/canon_map")
-        links.join(broadcast(cm), Seq("entity_id"), "left")
-          .withColumn("obj", coalesce(col("canon_id"), col("entity_id")))
-      } else links.withColumn("obj", col("entity_id"))
-      // narrow-key dedup BEFORE the subj/pred concat (same shape as
-      // KgPipeline.triples — BENCH.md lesson 13). This stays the GLOBAL
-      // distinct deliberately: `links` here is the COMMITTED snapshot, and
-      // a committed file re-splits on read (maxPartitionBytes), so one
-      // document's duplicate rows can span read partitions — the
-      // co-partitioned-duplicates contract LocalDistinct needs does not
-      // hold on snapshot reads, only on the in-memory narrow lineage.
-      resolved.select("repo", "path", "commit", "lang", "label", "obj")
-        .distinct()
-        .select(
-          concat_ws("@", concat_ws("/", col("repo"), col("path")), col("commit"))
-            .as("subj"),
-          concat(lit("mentions:"), col("label")).as("pred"),
-          col("obj"), col("repo"), col("lang"))
+      KgPipeline.linkTriples(links, canonMap)
     }
 
     triples.count()

@@ -133,7 +133,7 @@ object KgPipeline {
       assumeUniqueDocs: Boolean = false): DataFrame = {
     val mentions = if (sentenceLevel) sentenceMentions(docs) else docMentions(docs)
     val linked = links(spark, mentions)
-    val resolved =
+    val cm =
       if (canonicalize) {
         // The links lineage is deliberately RECOMPUTED for the two canon
         // consumers (the co-occurrence graph and the join-back). TWO
@@ -148,10 +148,24 @@ object KgPipeline {
         // exchanges cost more than the tag pass they save, because the
         // merged-literal tag scan is cheap per byte. Recompute narrow
         // lineage, don't pin intermediates.
-        val cm = canonMap(spark, linked)
-        linked.join(broadcast(cm), Seq("entity_id"), "left")
+        Some(canonMap(spark, linked))
+      } else None
+    linkTriples(linked, cm, assumeUniqueDocs)
+  }
+
+  /** Links → triples: resolve each link's obj through the optional canon
+    * map (entity_id → canon_id, unmapped ids keep their own), dedup, then
+    * project subj/pred. The one definition behind [[triples]] and the
+    * staged `graft.Main.run`.
+    */
+  def linkTriples(links: DataFrame, canonMap: Option[DataFrame],
+      assumeUniqueDocs: Boolean = false): DataFrame = {
+    val resolved = canonMap match {
+      case Some(cm) =>
+        links.join(broadcast(cm), Seq("entity_id"), "left")
           .withColumn("obj", coalesce(col("canon_id"), col("entity_id")))
-      } else linked.withColumn("obj", col("entity_id"))
+      case None => links.withColumn("obj", col("entity_id"))
+    }
     // Dedup on the NARROW key columns first, then project the subj/pred
     // strings: a triple is unique per (doc key, label, obj) — deduping
     // before the concat shuffles fewer bytes and computes the string build

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Per-stage checkpoint commits with lineage + row-count metrics — the
   * north rule's "resumes from the last committed Iceberg snapshot" clause,
@@ -11,9 +12,16 @@ import org.apache.spark.sql.functions._
   * in without touching callers).
   *
   * A stage commit is atomic-enough for resume purposes: data lands first,
-  * the manifest (with per-partition row counts and the input fingerprint)
-  * lands last; [[runStage]] recomputes only when no manifest exists or the
-  * input fingerprint changed.
+  * the manifest (with per-partition row counts, the input fingerprint and
+  * the committed relation's schema) lands last; [[runStage]] recomputes
+  * only when no manifest exists, the input fingerprint changed, or the
+  * manifest carries no schema (one written before the field existed).
+  *
+  * Like an Iceberg snapshot's metadata, the manifest carries the schema,
+  * so a stage read infers nothing: no footer-reading schema-inference job,
+  * and no directory-name re-typing of partition values (repo="01" stays
+  * "01", not 1). Both [[runStage]] paths read the snapshot with that
+  * schema.
   */
 object Manifest {
 
@@ -41,12 +49,13 @@ object Manifest {
   }
 
   /** Write a stage's output partitioned by `partitionCols`, then commit the
-    * manifest: stage name, total rows, per-partition row counts (lineage
-    * metrics), and the caller-supplied input fingerprint.
+    * manifest: stage name, total rows, the caller-supplied input
+    * fingerprint, per-partition row counts (lineage metrics), and the
+    * schema of `df`. Returns the committed relation, read with that schema.
     */
   def writeStage(spark: SparkSession, df: DataFrame, warehouse: String,
       stage: String, partitionCols: Seq[String],
-      inputFingerprint: String = ""): Unit = {
+      inputFingerprint: String = ""): DataFrame = {
     val out = s"$warehouse/$stage"
     // Co-locate each output partition's rows before the partitioned write
     // (the north rule's explicit repartition by repo/lang): without it,
@@ -90,10 +99,12 @@ object Manifest {
       s"""{"stage":${jsonStr(stage)},"rows":$total,""" +
         s""""input_fingerprint":${jsonStr(inputFingerprint)},""" +
         s""""partition_cols":${partitionCols.map(jsonStr).mkString("[", ",", "]")},""" +
-        s""""partitions":$parts}"""
+        s""""partitions":$parts,""" +
+        s""""schema":${jsonStr(df.schema.json)}}"""
     val p = new org.apache.hadoop.fs.Path(manifestPath(warehouse, stage))
     val o = fs(spark, warehouse).create(p, true)
     try o.write(manifest.getBytes("UTF-8")) finally o.close()
+    committed
   }
 
   private def jsonStr(s: String): String =
@@ -125,32 +136,46 @@ object Manifest {
     b.toString
   }
 
-  /** Extract the top-level `input_fingerprint` FIELD from a manifest — a
-    * key-anchored parse, not a substring scan: the fingerprint value
-    * appearing inside another field (a partition name, a future metadata
-    * string) must not read as fresh. Inside an escaped JSON string the
-    * quote characters are `\"`, so the `"input_fingerprint":"` anchor can
-    * only match the real top-level key this writer emitted.
+  /** Extract a top-level string FIELD from a manifest — a key-anchored
+    * parse, not a substring scan: the field's value appearing inside
+    * another field (a partition name, the schema JSON) must not read as
+    * that field. Inside an escaped JSON string the quote characters are
+    * `\"`, so the `"key":"` anchor can only match a real top-level key
+    * this writer emitted.
     */
-  private[graft] def readFingerprint(manifest: String): Option[String] =
-    """"input_fingerprint":"((?:[^"\\]|\\.)*)"""".r
+  private def readField(manifest: String, key: String): Option[String] =
+    raw""""$key":"((?:[^"\\]|\\.)*)"""".r
       .findFirstMatchIn(manifest)
       .map(m => jsonUnescape(m.group(1)))
 
+  /** The top-level `input_fingerprint` field, parsed leniently. */
+  private[graft] def readFingerprint(manifest: String): Option[String] =
+    readField(manifest, "input_fingerprint")
+
+  /** The committed relation's schema; `None` for a manifest without one
+    * (or with a schema that no longer parses), which reads as not fresh.
+    */
+  private def readSchema(manifest: String): Option[StructType] =
+    readField(manifest, "schema").flatMap(j =>
+      scala.util.Try(DataType.fromJson(j)).toOption.collect {
+        case s: StructType => s
+      })
+
   /** Run-or-resume: if the stage has a committed manifest whose input
-    * fingerprint matches, read the committed data; otherwise compute,
-    * commit, and return the committed relation (so downstream stages read
-    * the snapshot, not the lineage).
+    * fingerprint matches, read the committed data with the manifest's
+    * schema; otherwise compute, commit, and return the committed relation
+    * (so downstream stages read the snapshot, not the lineage). Neither
+    * path launches a schema-inference job.
     */
   def runStage(spark: SparkSession, warehouse: String, stage: String,
       partitionCols: Seq[String], inputFingerprint: String)
-      (compute: => DataFrame): DataFrame = {
-    val fresh = readManifest(spark, warehouse, stage)
-      .flatMap(readFingerprint)
-      .contains(inputFingerprint)
-    if (!fresh) {
-      writeStage(spark, compute, warehouse, stage, partitionCols, inputFingerprint)
+      (compute: => DataFrame): DataFrame =
+    readManifest(spark, warehouse, stage)
+      .filter(m => readFingerprint(m).contains(inputFingerprint))
+      .flatMap(readSchema) match {
+      case Some(schema) =>
+        spark.read.schema(schema).parquet(s"$warehouse/$stage")
+      case None =>
+        writeStage(spark, compute, warehouse, stage, partitionCols, inputFingerprint)
     }
-    spark.read.parquet(s"$warehouse/$stage")
-  }
 }

@@ -147,18 +147,27 @@ class CacheLinkCcSpec extends AnyFunSuite {
     // the guarded driver fast path and the distributed fallback must agree:
     // force the fallback by shrinking the driver-graph bound below the
     // edge count
+    def isProbe(site: String) = site.startsWith("take at")
     spark.conf.set(ConnectedComponents.maxDriverGraphConfKey, "1")
     try {
-      val fb = KgPipeline.canonMap(spark, links, Seq("doc_id"))
-        .as[(String, String)].collect().toMap
+      val (fb, fbJobs) = Fixtures.jobsDuring(spark)(
+        KgPipeline.canonMap(spark, links, Seq("doc_id"))
+          .as[(String, String)].collect().toMap)
       assert(fb == got, "distributed CC fallback must produce the same map")
+      // a positive bound probes first: the take() jobs the bound-0 arm
+      // below must not run are visible here
+      assert(fbJobs.exists(isProbe), s"bound 1 must probe; jobs: $fbJobs")
     } finally spark.conf.unset(ConnectedComponents.maxDriverGraphConfKey)
     // bound 0 = FORCE-distributed (r8): skips the probe entirely — the
     // j3_canon_dist gate's pin — and must still produce the identical map
     // WITHOUT a driver-built LocalRelation result
     spark.conf.set(ConnectedComponents.maxDriverGraphConfKey, "0")
     try {
-      val forced = KgPipeline.canonMap(spark, links, Seq("doc_id"))
+      // the distributed loop runs eagerly, inside canonMap
+      val (forced, forcedJobs) = Fixtures.jobsDuring(spark)(
+        KgPipeline.canonMap(spark, links, Seq("doc_id")))
+      assert(forcedJobs.nonEmpty && !forcedJobs.exists(isProbe),
+        s"bound 0 must skip the probe; jobs: $forcedJobs")
       val forcedDriverBuilt = forced.queryExecution.analyzed.collectLeaves()
         .forall(_.isInstanceOf[
           org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
@@ -416,5 +425,75 @@ class CacheLinkCcSpec extends AnyFunSuite {
     assert(m.contains("\"partition\":\"1e5\"") && m.contains("\"partition\":\"007\""),
       s"manifest rendered re-typed partition keys: $m")
     assert(!m.contains("100000") && !m.contains("\"partition\":\"7\""))
+  }
+
+  test("manifest stage reads keep numeric-looking partition values as strings (compute and resume)") {
+    // repo="01" must not come back as 1, nor lang="1e5" as 100000: both
+    // runStage paths read with the committed schema, so no directory-name
+    // type inference runs, and Main.run's subj keeps the leading zero.
+    val wh = tmpDir("warehouse-numeric")
+    val links = Seq(
+      ("01", "a.py", "c1", "1e5", "PER", "E01"),
+      ("007", "b.py", "c2", "2", "ORG", "E02"),
+      ("01", "c.py", "c3", "2", "GPE", "E03"))
+      .toDF("repo", "path", "commit", "lang", "label", "entity_id")
+    var computes = 0
+    def run(): DataFrame = Manifest.runStage(spark, wh, "links",
+      Seq("repo", "lang"), "fp")({ computes += 1; links })
+    val computed = run()
+    val resumed = run()
+    assert(computes == 1, "the second pass must resume")
+    for ((pass, rel) <- Seq("compute" -> computed, "resume" -> resumed)) {
+      assert(Seq("repo", "lang").map(rel.schema(_).dataType) ==
+        Seq(org.apache.spark.sql.types.StringType,
+          org.apache.spark.sql.types.StringType),
+        s"$pass pass re-typed the partition columns: ${rel.schema.simpleString}")
+      assert(rel.select("repo", "lang").as[(String, String)].collect().toSet ==
+        Set(("01", "1e5"), ("007", "2"), ("01", "2")), s"$pass pass values")
+      val subj = KgPipeline.linkTriples(rel, None)
+        .select("subj").as[String].collect().toSet
+      assert(subj == Set("01/a.py@c1", "007/b.py@c2", "01/c.py@c3"),
+        s"$pass pass subj: $subj")
+    }
+  }
+
+  test("manifest resume launches no Spark job (the schema comes from the manifest)") {
+    val wh = tmpDir("warehouse-jobs")
+    val part = Seq("repo", "lang")
+    Manifest.runStage(spark, wh, "docs", part, "fp")(Fixtures.docsDf(50))
+    val (rel, jobs) = Fixtures.jobsDuring(spark)(
+      Manifest.runStage(spark, wh, "docs", part, "fp")(
+        fail("a fresh manifest must not recompute")))
+    assert(jobs.isEmpty, s"fresh-manifest runStage launched jobs: $jobs")
+    assert(rel.count() == 50)
+  }
+
+  test("manifest without a usable schema (earlier format, or corrupt) recomputes once, then resumes") {
+    val wh = tmpDir("warehouse-noschema")
+    var computes = 0
+    def run(): DataFrame = Manifest.runStage(spark, wh, "docs", Seq("lang"),
+      "fp")({ computes += 1; Fixtures.docsDf(20) })
+    run()
+    val current = Manifest.readManifest(spark, wh, "docs").get
+    val schemaField = ""","schema":"(?:[^"\\]|\\.)*"}$"""
+    val earlier = current.replaceFirst(schemaField, "}")
+    assert(earlier != current && !earlier.contains("\"schema\""))
+    // a schema that no longer parses reads as not fresh too, not as a throw
+    val corrupt = current.replaceFirst(schemaField, ""","schema":"{"}""")
+    for ((variant, manifest) <- Seq("no schema" -> earlier, "corrupt schema" -> corrupt)) {
+      // through the Hadoop filesystem, so the checksum file stays consistent
+      val p = new org.apache.hadoop.fs.Path(Manifest.manifestPath(wh, "docs"))
+      val o = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+      try o.write(manifest.getBytes("UTF-8")) finally o.close()
+      val before = computes
+      val (_, recomputeJobs) = Fixtures.jobsDuring(spark)(run())
+      assert(computes == before + 1 && recomputeJobs.nonEmpty,
+        s"$variant: the stage must recompute")
+      assert(Manifest.readManifest(spark, wh, "docs").get == current,
+        s"$variant: the recompute commits the schema-carrying manifest")
+      val (_, resumeJobs) = Fixtures.jobsDuring(spark)(run())
+      assert(computes == before + 1 && resumeJobs.isEmpty,
+        s"$variant: after the recompute it resumes")
+    }
   }
 }

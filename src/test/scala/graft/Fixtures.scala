@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 import graft.model.Doc
@@ -63,5 +64,27 @@ object Fixtures {
     val s = SharedSpark.spark
     import s.implicits._
     s.createDataset(docs(n, seed)).toDF()
+  }
+
+  /** Runs `body` and returns its result with the call site of every Spark
+    * job it started (the result stage's name, e.g. `take at X.scala:12`;
+    * empty for a job with no stages), in start order. The listener bus is drained before the listener is
+    * attached and again after `body`, so no earlier job is counted and no
+    * job of `body` is lost.
+    */
+  def jobsDuring[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.maxByOption(_.stageId).fold("")(_.name))
+    }
+    org.apache.spark.graft.ListenerBusBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      org.apache.spark.graft.ListenerBusBridge.drain(sc)
+      (result, sites.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
   }
 }
