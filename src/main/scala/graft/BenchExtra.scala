@@ -38,11 +38,20 @@ object BenchExtra {
       def noop(): Unit =
         df.write.format("noop").mode("overwrite").save()
       // does each ACTION's executed plan keep the total-order range
-      // exchange? (count() may drop the sort; the noop write must not)
+      // exchange? (count() may drop the sort; the noop write must not).
+      // Read after the action has run on the same instance: before it,
+      // AQE's executedPlan is the initial plan, not the final one. The
+      // full plan runs through its own toRdd, as the noop sink does: a
+      // noop write plans a separate QueryExecution and leaves this
+      // instance's plan initial.
       def hasRange(d: org.apache.spark.sql.DataFrame): Boolean =
         d.queryExecution.executedPlan.toString.contains("rangepartitioning")
-      val countPlanRange = hasRange(df.groupBy().count())
-      val fullPlanRange = hasRange(df)
+      val full = df
+      full.queryExecution.toRdd.foreach(_ => ())
+      val fullPlanRange = hasRange(full)
+      val counted = df.groupBy().count()
+      counted.collect()
+      val countPlanRange = hasRange(counted)
       spark.sparkContext.setJobDescription(s"bench-extra: $name noop")
       noop() // warmup
       val noopTimes = (1 to 3).map(_ => time(noop()))

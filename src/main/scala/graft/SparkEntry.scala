@@ -104,7 +104,7 @@ object SparkEntry {
     */
   private def spreadDocs(s: SparkSession, df: DataFrame): DataFrame = {
     val cores = s.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
+    if (df.queryExecution.toRdd.getNumPartitions < cores) df.repartition(cores) else df
   }
 
   // Spark-side cleaned documents (doc_id, lang, source, cleaned)

@@ -23,18 +23,10 @@ import org.apache.spark.sql.graft.CheckpointBridge
   *    AQE-off with a pinned partition count so the edge relation shuffles
   *    and sorts once for the whole loop instead of once per round; each
   *    round releases the superseded round's checkpoint blocks;
-  *  - OPT-IN salting of hot vertices before the neighbor aggregation
-  *    (`salts > 1`): the min-neighbor-label aggregate is computed per
-  *    (vertex, salt) first, spreading a celebrity vertex's edges over
-  *    `salts` reducers. Default OFF since the 50M-edge A/B (BENCH.md
-  *    §42): `min` is algebraic, so HashAggregate's map-side partials
-  *    already cap hot-key reduce fan-in at one row per map partition,
-  *    and the salt stage's extra O(E) exchange per round measured +30%
-  *    wall / +43% executor time at 10M-degree hubs for protection the
-  *    partial agg had already provided. Skew mitigation for hot
-  *    entities thus lives in Spark's standard partial+final
-  *    HashAggregate split; explicit salting remains for non-algebraic
-  *    aggregates or engines without partial pushdown;
+  *  - hot vertices need no salting: `min` is algebraic, so the hop's
+  *    map-side partial aggregates cap a hot key's reduce fan-in at one
+  *    row per map partition (see [[neighborMin]]; BENCH.md §42 measured
+  *    a salt stage at +30% wall on 10M-degree hubs);
   *  - convergence detection by counting changed labels (fixpoint test);
   *    non-convergence within `maxIter` THROWS — a silently-unconverged
   *    canonical map would corrupt every downstream triple.
@@ -57,7 +49,7 @@ object ConnectedComponents {
       s, org.apache.spark.sql.graft.ColumnBridge.logicalPlan(df))
 
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 30,
-      salts: Int = 1, vertices: Option[DataFrame] = None): DataFrame = {
+      vertices: Option[DataFrame] = None): DataFrame = {
     // The loop runs on a CLONED session (spark.newSession()) with AQE
     // OFF and a pinned shuffle-partition count: `Dataset.localCheckpoint`
     // loses partitioning metadata (stale attributes without AQE,
@@ -69,9 +61,9 @@ object ConnectedComponents {
     // round's hop and label joins reuse its layout; only the
     // aggregations, the pointer-doubling re-key, and the next-label
     // repartition exchange per round. AQE's in-loop services are not
-    // missed: skew is handled by the explicit salt stage / map-side min
-    // partials, and coalescing is subsumed by sizing `parts` from the
-    // measured edge count (250k rows/partition, capped by the caller's
+    // missed: skew is handled by neighborMin's map-side min partials,
+    // and coalescing is subsumed by sizing `parts` from the measured edge
+    // count (250k rows/partition, capped by the caller's
     // shuffle.partitions — the operator's cluster-scale knob). The
     // cloned session keeps the conf scope PRIVATE: queries planned
     // concurrently on the caller's session (e.g. a streaming
@@ -131,28 +123,8 @@ object ConnectedComponents {
       var converged = false
       while (iter < maxIter && !converged) {
         // hop: candidate = min(own component, min over neighbors'
-        // components). The DEFAULT (salts <= 1) relies on HashAggregate's
-        // map-side partial for skew: `min` is algebraic, so a hot vertex's
-        // reduce fan-in is already capped at one row per map partition —
-        // the same bound explicit salting buys — while shuffling one
-        // exchange less per iteration. Measured: at 6M edges the two arms
-        // were noise-equivalent (§28); at 50M edges the salt stage's extra
-        // O(E) exchange cost +30% wall / +43% executor time at 10M-degree
-        // hubs (§42), so salted became the OPT-IN (non-algebraic
-        // aggregates, engines without partial pushdown) rather than the
-        // default. sym and labels are co-partitioned (and co-sorted)
-        // on the join key, so this join moves no rows.
-        val joined = sym.df.join(labels.df.withColumnRenamed("id", "src"), "src")
-        val withNbr =
-          if (salts > 1) joined
-            .withColumn("salt", pmod(hash(col("src")), lit(salts)))
-            .groupBy(col("dst"), col("salt"))
-            .agg(min(col("component")).as("cand"))
-            .groupBy(col("dst").as("id"))
-            .agg(min(col("cand")).as("nbr_min"))
-          else joined
-            .groupBy(col("dst").as("id"))
-            .agg(min(col("component")).as("nbr_min"))
+        // components).
+        val withNbr = neighborMin(sym.df, labels.df)
 
         // `old` rides along so the convergence check below needs no extra
         // join; labels side is exchange- and sort-free (checkpoint layout),
@@ -218,6 +190,17 @@ object ConnectedComponents {
         throw t
     }
   }
+
+  /** One hop of the loop: per vertex `id`, the minimum `component` over
+    * its neighbors in `sym` (src, dst), read from `labels` (id,
+    * component). Plans as a map-side partial `min` plus a final merge
+    * (spec-pinned). In the loop `sym` and `labels` are co-partitioned and
+    * co-sorted on the join key, so the join moves no rows.
+    */
+  private[graft] def neighborMin(sym: DataFrame, labels: DataFrame): DataFrame =
+    sym.join(labels.withColumnRenamed("id", "src"), "src")
+      .groupBy(col("dst").as("id"))
+      .agg(min(col("component")).as("nbr_min"))
 
   /** [[run]] with a guarded driver fast path. Real co-occurrence /
     * near-dup graphs are far smaller than the corpora they summarize

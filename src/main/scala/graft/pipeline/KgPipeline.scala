@@ -198,11 +198,4 @@ object KgPipeline {
         col("obj"),
         col("repo"), col("lang"))
   }
-
-  /** S4 sink: write triples partitioned by (repo, lang) with a manifest. */
-  def materialize(spark: SparkSession, docs: DataFrame, warehouse: String,
-      canonicalize: Boolean = true): Unit = {
-    val t = triples(spark, docs, canonicalize)
-    Manifest.writeStage(spark, t, warehouse, "triples", Seq("repo", "lang"))
-  }
 }

@@ -30,12 +30,10 @@ import graft.operators.ConnectedComponents
   *    NO skew.
   *  - `star`: every spoke points at its group's minimum vertex (the hub),
   *    degree(hub) = groupSize - 1. With a large groupSize this is the
-  *    celebrity-vertex regime the salt stage exists for: after
-  *    symmetrization the hub contributes groupSize rows to the join on
-  *    `src` AND groupSize rows into the min-neighbor aggregation on
-  *    `dst`. Diameter 2, so rounds don't dominate — per-round skew does.
-  *    Pair with `SPARK_GRAFT_CC_SALTS={8,1}` for the protection A/B that
-  *    the chain fixture structurally cannot measure (BENCH.md §28).
+  *    celebrity-vertex regime: after symmetrization the hub contributes
+  *    groupSize rows to the join on `src` AND groupSize rows into the
+  *    min-neighbor aggregation on `dst`. Diameter 2, so rounds don't
+  *    dominate — per-round skew does.
   *
   * Ids are zero-padded to 10 chars (the `dedup_clusters` convention) so
   * numeric and lexicographic order agree.
@@ -97,12 +95,9 @@ object CcScale {
 
     // distributed path via the public entry: the probe overflows the 2M
     // guard and run()'s pointer-doubling loop executes (assert it did).
-    // SPARK_GRAFT_CC_SALTS overrides the loop's salt factor for the
-    // salted-vs-partial-agg A/B (<=1 skips the salt pre-aggregation).
     require(nEdges > 2_000_000L,
       s"edge count $nEdges under the default guard — the run would take " +
         "the driver path and measure nothing; raise edgesTarget")
-    val saltsOverride = sys.env.get("SPARK_GRAFT_CC_SALTS").map(_.toInt)
     // Listener metrics around the distributed run: jobs / stages / shuffle
     // bytes / summed executor runTime are what ground the loop's perf
     // claims — co-tenant contention can swing wall-clock 2-5× both ways
@@ -123,12 +118,7 @@ object CcScale {
     }
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val comp = saltsOverride match {
-      case Some(sl) =>
-        println(s"[ccscale] salts=$sl (direct run(), bypassing runAuto)")
-        ConnectedComponents.run(spark, edges, salts = sl)
-      case None => ConnectedComponents.runAuto(spark, edges)
-    }
+    val comp = ConnectedComponents.runAuto(spark, edges)
     // time the CC computation alone (the loop runs eagerly and the labels
     // are checkpoint-backed, so the result is materialized here) — the
     // ground-truth scan below is verification, not the measured work, and
@@ -170,8 +160,7 @@ object CcScale {
     // SPARK_GRAFT_CC_SKIP_DRIVER=1 skips the driver union-find comparison:
     // at 20M+ edges the collect alone is a multi-GB driver materialization
     // that adds nothing to the loop's ground-truth verification above
-    if (saltsOverride.isDefined ||
-        sys.env.get("SPARK_GRAFT_CC_SKIP_DRIVER").contains("1")) {
+    if (sys.env.get("SPARK_GRAFT_CC_SKIP_DRIVER").contains("1")) {
       spark.stop(); return
     }
 

@@ -134,6 +134,54 @@ class CacheLinkCcSpec extends AnyFunSuite {
     labels.rdd.unpersist(false)
   }
 
+  test("J3: hop aggregation plans partial_min before its exchange and final min after (hot-key defense)") {
+    // The loop's skew defense: `min` is algebraic, so the hop plans as a
+    // partial aggregate below its one exchange and a final merge above it.
+    // A hub of degree 2000 over 4 partitions reaches its reducer as at most
+    // 4 partial rows. Planned as the loop runs it: AQE off, pinned
+    // partition count, bridge checkpoints co-partitioned on the join key.
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, Final, Min, Partial}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.graft.CheckpointBridge
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2.conf.set("spark.sql.shuffle.partitions", "4")
+    val spokes = (1 to 2000).map(i => ("000000", f"$i%06d"))
+    val star = s2.createDataFrame(spokes).toDF("src", "dst")
+    val e = star.unionAll(star.select(col("dst").as("src"), col("src").as("dst")))
+
+    val sym = CheckpointBridge.localCheckpointKeepPartitioning(
+      e.repartition(4, col("src")).sortWithinPartitions("src"), eager = true)
+    val labels = CheckpointBridge.localCheckpointKeepPartitioning(
+      sym.df.select(col("src").as("id")).distinct().sortWithinPartitions("id")
+        .withColumn("component", col("id")), eager = true)
+    val nbr = ConnectedComponents.neighborMin(sym.df, labels.df)
+    val got = nbr.as[(String, String)].collect().toMap
+    assert(got == spokes.map(_._2).map(_ -> "000000").toMap + ("000000" -> "000001"))
+
+    val plan = nbr.queryExecution.executedPlan
+    def hasMin(a: BaseAggregateExec, mode: AggregateMode): Boolean =
+      a.aggregateExpressions.exists(x =>
+        x.mode == mode && x.aggregateFunction.isInstanceOf[Min])
+    val exchanges = plan.collect { case x: ShuffleExchangeExec => x }
+    assert(exchanges.size == 1, plan.toString)
+    val partials = exchanges.head.child.collect {
+      case a: BaseAggregateExec if hasMin(a, Partial) => a }
+    assert(partials.size == 1, plan.toString)
+    val finals = plan.collect {
+      case a: BaseAggregateExec if hasMin(a, Final) => a }
+    assert(finals.size == 1, plan.toString)
+    assert(finals.head.collectFirst { case x: ShuffleExchangeExec => x }.nonEmpty,
+      plan.toString)
+    sym.rdd.unpersist(false)
+    labels.rdd.unpersist(false)
+
+    val cc = ConnectedComponents.run(spark, spokes.toDF("src", "dst"))
+      .as[(String, String)].collect().toMap
+    assert(cc == ConnectedComponents.runScalar(spokes))
+  }
+
   test("J3: isolated vertices survive canonMap (vertex set from links, not edges)") {
     // E07 is linked in one doc with no co-occurring entity: no edge touches
     // it, but the canon map must still carry it as its own canonical id.
@@ -342,32 +390,6 @@ class CacheLinkCcSpec extends AnyFunSuite {
     val got = ConnectedComponents.run(spark, chain.toDF("src", "dst"))
       .as[(String, String)].collect().toMap
     assert(got.values.toSet == Set("n00"))
-  }
-
-  test("skew: salted join == plain join; salted aggregate == plain aggregate (hot key)") {
-    import graft.operators.Skew
-    // hot key: 'k0' carries 90% of the fact rows
-    val fact = ((1 to 900).map(i => ("k0", i.toLong)) ++
-      (1 to 100).map(i => (s"k${i % 7 + 1}", i.toLong)))
-      .toDF("key", "v")
-    val dim = (0 to 7).map(i => (s"k$i", s"payload$i")).toDF("key", "payload")
-
-    val plain = fact.join(dim, Seq("key"))
-      .groupBy("key", "payload").agg(sum("v").as("s"))
-      .as[(String, String, Long)].collect().toSet
-    val salted = Skew.saltedJoin(fact, dim, "key", col("v"), salts = 8)
-      .groupBy("key", "payload").agg(sum("v").as("s"))
-      .as[(String, String, Long)].collect().toSet
-    assert(salted == plain)
-
-    val aggPlain = fact.groupBy("key")
-      .agg(countDistinct("v").as("n")).as[(String, Long)].collect().toSet
-    val aggSalted = Skew.saltedAggregate(fact, Seq("key"), col("v"), 8,
-      collect_set(col("v")), "vs",
-      parts => size(array_distinct(flatten(collect_list(parts)))).cast("long"))
-      .withColumnRenamed("vs", "n")
-      .as[(String, Long)].collect().toSet
-    assert(aggSalted == aggPlain)
   }
 
   test("manifest resume: second run reads the committed snapshot; fingerprint change recomputes") {

@@ -242,20 +242,6 @@ class EndToEndSpec extends AnyFunSuite {
     assert(Seq(0.0, -0.0).toDF("x").distinct().count() == 1)
   }
 
-  test("stage registry composes to the same result as the hand-built pipeline") {
-    import graft.pipeline.Stage
-    val docs = Tables.docsDf(spark, dir)
-    val composed = Stage.pipeline(spark,
-      Seq("cleanup", "split", "tag", "threshold", "link"))(docs)
-      .select("repo", "path", "entity_id").distinct()
-      .as[(String, String, String)].collect().toSet
-    val direct = graft.pipeline.KgPipeline.links(spark,
-        graft.pipeline.KgPipeline.sentenceMentions(docs))
-      .select("repo", "path", "entity_id").distinct()
-      .as[(String, String, String)].collect().toSet
-    assert(composed == direct && composed.nonEmpty)
-  }
-
   test("sha256 row invariant holds on the driver table (north rule)") {
     val bad = Tables.documents(spark, dir)
       .select(sha2(col("text"), 256).as("spark_side"), col("text"))
