@@ -1,8 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.math.BigInteger
+
+import org.apache.spark.SparkConf
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
+import graft.functions.Text
 import graft.pipeline.{KgPipeline, Manifest}
 import graft.sources.Tables
 
@@ -21,17 +26,8 @@ object Main {
     val Array(sfDir, warehouse) = args.take(2)
     val canon = args.contains("--canon")
 
-    // When submitted via spark-submit the master/memory come from the
-    // launcher; the builder only fills sane defaults for bare runs.
     val spark = SparkSession.builder()
-      .appName("graft-kg-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
+      .config(sessionConf(new SparkConf(), sys.env))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val n = run(spark, sfDir, warehouse, canon)
@@ -39,59 +35,109 @@ object Main {
     spark.stop()
   }
 
-  /** Order-independent distributed corpus fingerprint — the resumability
-    * keystone (stage inputs are re-validated against it on resume). Each
-    * row's sha256 is sliced into four 15-hex (60-bit) integers summed as
-    * DECIMAL(38,0) with map-side partial aggregation; the four sums + the
-    * row count are hashed once. Properties pinned by spec: invariant under
-    * partitioning/row order (decimal sums are exact and commutative);
-    * sensitive to any single-row content change; O(1) driver and
-    * aggregation-buffer memory at any corpus size (the round-1 version
-    * collect_list'ed every row hash into ONE reducer).
+  /** The session conf of a [[main]] run. `submitted` is what spark-submit
+    * passed (`new SparkConf()` loads its `spark.*` system properties): a
+    * submitted master or shuffle partition count wins, and only a bare run
+    * gets the defaults `local[SPARK_GRAFT_CPUS]` (or `SPARK_GRAFT_MASTER`)
+    * and `SPARK_GRAFT_CPUS` partitions, 32 when unset.
     */
-  def corpusFingerprint(docs: org.apache.spark.sql.DataFrame): String = {
-    import org.apache.spark.sql.types.DecimalType
-    val rowHash = sha2(col("content"), 256)
-    val slices = (0 until 4).map(i =>
-      sum(conv(substring(rowHash, i * 16 + 1, 15), 16, 10)
-        .cast(DecimalType(38, 0))).cast("string").as(s"s$i"))
-    docs.agg(count(lit(1)).cast("string").as("n"), slices: _*)
-      .select(sha2(concat_ws("|",
-        col("n") +: (0 until 4).map(i => col(s"s$i")): _*), 256))
-      .collect()(0).getString(0)
+  def sessionConf(submitted: SparkConf, env: Map[String, String]): SparkConf = {
+    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    submitted.clone()
+      .setAppName("graft-kg-pipeline")
+      .setIfMissing("spark.master",
+        env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+      .setIfMissing("spark.sql.shuffle.partitions", cpus)
+      .set("spark.sql.adaptive.enabled", "true")
+      .set("spark.sql.adaptive.skewJoin.enabled", "true")
+      .set("spark.sql.session.timeZone", "UTC")
+  }
+
+  /** Order-independent distributed corpus fingerprint — the resumability
+    * keystone (stage fingerprints chain from it). Each row's sha256 of
+    * `content` is sliced into four 15-hex (60-bit) integers; each partition
+    * sums them exactly, and one RDD `fold` (not `reduce`: an RDD may have
+    * no partitions) merges the partitions — one pass, one Spark job, O(1)
+    * driver memory. The driver hashes `n|s0|s1|s2|s3`. Null `content` rows
+    * count in `n` only, and with no non-null row the sums are left out, as
+    * `concat_ws` skipped the null sums of the former DataFrame aggregate:
+    * the digest is byte-identical to it (parity spec against that twin).
+    * Invariant under partitioning and row order; sensitive to any
+    * single-row content change.
+    */
+  def corpusFingerprint(docs: DataFrame): String = {
+    val zero = Array.fill(6)(BigInteger.ZERO)
+    val Array(n, hashed, sums @ _*) =
+      docs.select(sha2(col("content"), 256)).queryExecution.toRdd
+        .mapPartitions(rows => Iterator(sliceSums(rows)))
+        .fold(zero)((a, b) => a.zip(b).map { case (x, y) => x.add(y) })
+    Text.sha256HexScalar((if (hashed.signum == 0) Seq(n) else n +: sums).mkString("|"))
+  }
+
+  /** One partition's (row count, non-null hash count, four slice sums) of
+    * [[corpusFingerprint]]. A slice is < 2^60, so a Long sum below 2^62
+    * takes one more without overflow; it spills into a `BigInteger` there.
+    */
+  private def sliceSums(rows: Iterator[InternalRow]): Array[BigInteger] = {
+    val spill = 1L << 62
+    var n = 0L
+    var hashed = 0L
+    val low = new Array[Long](4)
+    val high = Array.fill(4)(BigInteger.ZERO)
+    rows.foreach { r =>
+      n += 1
+      if (!r.isNullAt(0)) {
+        hashed += 1
+        val hex = r.getUTF8String(0).toString
+        var i = 0
+        while (i < 4) {
+          low(i) += java.lang.Long.parseLong(hex, i * 16, i * 16 + 15, 16)
+          if (low(i) >= spill) {
+            high(i) = high(i).add(BigInteger.valueOf(low(i)))
+            low(i) = 0
+          }
+          i += 1
+        }
+      }
+    }
+    Array(BigInteger.valueOf(n), BigInteger.valueOf(hashed)) ++
+      high.zip(low).map { case (h, l) => h.add(BigInteger.valueOf(l)) }
   }
 
   /** The resumable staged pipeline (separated from main so tests can drive
-    * it on a shared session). Returns the triple count.
+    * it on a shared session). Returns the triple count: the `rows` of the
+    * committed `triples` manifest, which `writeStage` counted from the
+    * committed snapshot, so a resume re-scans nothing.
+    *
+    * Each stage's fingerprint chains its name, its parameters and its
+    * input stages' fingerprints ([[Manifest.stageFingerprint]]), down to
+    * the corpus fingerprint of the source: a stage resumes only when
+    * everything it depends on is unchanged (a `--canon` toggle recomputes
+    * `triples`). A fresh resume runs one Spark job, the fingerprint scan.
     */
   def run(spark: SparkSession, sfDir: String, warehouse: String,
       canon: Boolean): Long = {
-    // stage 0: source snapshot (sha256 row invariant recorded as the
-    // downstream input fingerprint — BASELINE.json per-row invariant).
-    // Order-independent DISTRIBUTED digest: each row's sha256 is sliced
-    // into four 15-hex (60-bit) integers summed as DECIMAL(38,0) with
-    // map-side partial aggregation, then the four sums + the row count are
-    // hashed once. O(1) driver and aggregation-buffer memory at any corpus
-    // size — the previous collect_list of every row hash concentrated all
-    // N digests in ONE reducer (a ~64 TB string at 10^12 rows).
     val docs = Tables.docsDf(spark, sfDir)
     val corpusFp = Main.corpusFingerprint(docs)
+    def stage(name: String, partitionCols: Seq[String], inputFps: Seq[String],
+        params: Seq[String] = Nil)(compute: => DataFrame): (DataFrame, String) = {
+      val fp = Manifest.stageFingerprint(name, params, inputFps)
+      (Manifest.runStage(spark, warehouse, name, partitionCols, fp)(compute), fp)
+    }
+    val part = Seq("repo", "lang")
 
-    val docsCommitted = Manifest.runStage(spark, warehouse, "docs",
-      Seq("repo", "lang"), corpusFp)(docs)
+    val (docsCommitted, docsFp) = stage("docs", part, Seq(corpusFp))(docs)
 
-    val mentions = Manifest.runStage(spark, warehouse, "mentions",
-      Seq("repo", "lang"), corpusFp) {
+    val (mentions, mentionsFp) = stage("mentions", part, Seq(docsFp)) {
       KgPipeline.sentenceMentions(docsCommitted)
     }
 
-    val links = Manifest.runStage(spark, warehouse, "links",
-      Seq("repo", "lang"), corpusFp) {
+    val (links, linksFp) = stage("links", part, Seq(mentionsFp)) {
       KgPipeline.links(spark, mentions)
     }
 
     val canonMap = if (canon) Some(
-      Manifest.runStage(spark, warehouse, "canon_map", Seq.empty, corpusFp) {
+      stage("canon_map", Seq.empty, Seq(linksFp)) {
         KgPipeline.canonMap(spark, links)
       }) else None
 
@@ -101,11 +147,11 @@ object Main {
     // rows can span read partitions — the co-partitioned-duplicates
     // contract LocalDistinct needs does not hold on snapshot reads, only
     // on the in-memory narrow lineage.
-    val triples = Manifest.runStage(spark, warehouse, "triples",
-      Seq("repo", "lang"), corpusFp) {
-      KgPipeline.linkTriples(links, canonMap)
+    stage("triples", part, linksFp +: canonMap.map(_._2).toSeq,
+        params = Seq(s"canon=$canon")) {
+      KgPipeline.linkTriples(links, canonMap.map(_._1))
     }
 
-    triples.count()
+    Manifest.committedRows(spark, warehouse, "triples")
   }
 }

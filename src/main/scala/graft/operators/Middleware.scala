@@ -3,12 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The middleware registry (U1, `ner_tagger/middleware.py:125-130`): named
-  * post-processing stages over the tagged-mention relation. Each stage is a
-  * plain `DataFrame => DataFrame`, mirroring the reference's
+/** The middleware stages (U1, `ner_tagger/middleware.py:125-130`):
+  * post-processing over the tagged-mention relation, one plain
+  * `DataFrame => DataFrame` function per entry of the reference's
   * `middleware = {'passthrough','sentiment','nertagger','zmq'}` dict —
   * the zmq variant collapses into [[Lemmatizer.normalized]] (its worker just
-  * lemmatized + regrouped, `middlewareServer.py:90-131`).
+  * lemmatized + regrouped, `middlewareServer.py:90-131`). Callers name the
+  * function they compose; no path selects a middleware by a runtime string,
+  * so no name-to-stage map is kept.
   */
 object Middleware {
 
@@ -62,12 +64,6 @@ object Middleware {
     df.groupBy(keyCols.map(col): _*)
       .agg((sum(signed) / nullif(sum(known), lit(0L))).as("score"))
   }
-
-  /** The registry itself (U1). */
-  def registry: Map[String, DataFrame => DataFrame] = Map(
-    "passthrough" -> passthrough,
-    "nertagger" -> (df => entityGroups(df, Seq("repo", "path", "commit"))),
-    "lemma" -> (df => Lemmatizer.normalized(df)))
 }
 
 /** G5 — the spacy lemmatize/filter worker's semantics

@@ -152,6 +152,29 @@ object Manifest {
   private[graft] def readFingerprint(manifest: String): Option[String] =
     readField(manifest, "input_fingerprint")
 
+  /** The top-level `rows` field: the committed snapshot's row total. The
+    * writer emits it before `partitions`, so the first `"rows":` key is the
+    * top-level one; a `"rows":` inside a string value is escaped (`\"`) and
+    * cannot match.
+    */
+  private def readRows(manifest: String): Option[Long] =
+    """"rows":(\d+)""".r.findFirstMatchIn(manifest).map(_.group(1).toLong)
+
+  /** The committed row total of `stage`, from its manifest (no scan). */
+  def committedRows(spark: SparkSession, warehouse: String, stage: String): Long =
+    readManifest(spark, warehouse, stage).flatMap(readRows).getOrElse(
+      throw new IllegalStateException(s"no committed rows for stage $stage in $warehouse"))
+
+  /** A stage's input fingerprint, chained like a lineage: sha256 of the
+    * stage name, its parameters (`key=value`) and the fingerprints of its
+    * inputs (the corpus fingerprint for a source stage). A change anywhere
+    * upstream, or in a parameter, changes every fingerprint downstream of it.
+    * Driver-only string hashing; no Spark job.
+    */
+  def stageFingerprint(stage: String, params: Seq[String], inputs: Seq[String]): String =
+    graft.functions.Text.sha256HexScalar(
+      Seq(stage, params.mkString(","), inputs.mkString(",")).mkString("|"))
+
   /** The committed relation's schema; `None` for a manifest without one
     * (or with a schema that no longer parses), which reads as not fresh.
     */

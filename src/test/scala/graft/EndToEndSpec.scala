@@ -273,6 +273,103 @@ class EndToEndSpec extends AnyFunSuite {
     assert(graft.pipeline.Manifest.readManifest(spark, wh, "triples").get == m1)
   }
 
+  /** The former `Main.corpusFingerprint`, a DataFrame global aggregate
+    * (DECIMAL(38,0) slice sums, `concat_ws` over the count and the sums),
+    * kept as the parity twin of the one-pass fold.
+    */
+  private def fingerprintTwin(docs: org.apache.spark.sql.DataFrame): String = {
+    val rowHash = sha2(col("content"), 256)
+    val slices = (0 until 4).map(i =>
+      sum(conv(substring(rowHash, i * 16 + 1, 15), 16, 10)
+        .cast(org.apache.spark.sql.types.DecimalType(38, 0))).cast("string").as(s"s$i"))
+    docs.agg(count(lit(1)).cast("string").as("n"), slices: _*)
+      .select(sha2(concat_ws("|",
+        col("n") +: (0 until 4).map(i => col(s"s$i")): _*), 256))
+      .collect()(0).getString(0)
+  }
+
+  test("corpus fingerprint == the DataFrame-aggregate twin, in one job (nulls, empty and 0 partitions)") {
+    import org.apache.spark.sql.Row
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT, content STRING")
+    val texts = Fixtures.docs(120).map(_.content)
+    def rows(content: Int => String, n: Int) = (0 until n).map(i => Row(i, content(i)))
+    val cases = Seq(
+      ("1 partition", rows(texts, 120), 1),
+      ("7 partitions", rows(texts, 120), 7),
+      ("null content rows", rows(i => if (i % 3 == 0) null else texts(i), 120), 7),
+      ("all-null content", rows(_ => null, 40), 7),
+      ("empty partitions", rows(texts, 3), 7),
+      ("0 partitions", Seq.empty[Row], 0))
+    val failures = cases.flatMap { case (name, rs, parts) =>
+      val rdd = if (parts == 0) spark.sparkContext.emptyRDD[Row]
+        else spark.sparkContext.parallelize(rs, parts)
+      val df = spark.createDataFrame(rdd, schema)
+      assert(df.rdd.getNumPartitions == parts, name)
+      val (fp, jobs) = Fixtures.jobsDuring(spark)(graft.Main.corpusFingerprint(df))
+      Option.when(fp != fingerprintTwin(df))(s"$name: digest differs from the twin") ++
+        Option.when(jobs.size != 1)(s"$name: ${jobs.size} jobs, want one pass in one job")
+    }
+    assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  /** A cold `Main.run --canon` build of sf0.001 and the triple count it
+    * returned, shared by the resume specs below.
+    */
+  private lazy val canonBuild: (String, Long) = {
+    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
+    (wh, graft.Main.run(spark, dir, wh, canon = true))
+  }
+
+  private def committedTriples(wh: String): Long =
+    spark.read.parquet(s"$wh/triples").count()
+
+  test("Main.run: cold and resumed runs return the committed triples' row count") {
+    val (wh, cold) = canonBuild
+    assert(cold == committedTriples(wh))
+    assert(graft.Main.run(spark, dir, wh, canon = true) == committedTriples(wh))
+  }
+
+  test("Main.run: a fresh resume launches exactly one Spark job (the fingerprint scan)") {
+    val (wh, cold) = canonBuild
+    val (n, jobs) = Fixtures.jobsDuring(spark)(graft.Main.run(spark, dir, wh, canon = true))
+    assert(n == cold)
+    assert(jobs.size == 1, s"a resume reads metadata only; got jobs $jobs")
+  }
+
+  test("Main.run: toggling --canon on one warehouse recomputes triples both ways") {
+    val (_, canonN) = canonBuild
+    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
+    val plainN = graft.Main.run(spark, dir, wh, canon = false)
+    assert(plainN != canonN, "the fixture must tell the two modes apart")
+    assert(graft.Main.run(spark, dir, wh, canon = true) == canonN,
+      "a --canon run on a plain warehouse resumed the plain triples")
+    assert(committedTriples(wh) == canonN)
+    assert(graft.Main.run(spark, dir, wh, canon = false) == plainN,
+      "a plain run on a --canon warehouse resumed the canonicalized triples")
+    assert(committedTriples(wh) == plainN)
+  }
+
+  test("Main.sessionConf: a submitted master and partition count win; a bare run gets the defaults") {
+    import org.apache.spark.SparkConf
+    val submitted = new SparkConf(false)
+      .set("spark.master", "local-cluster[2,1,1024]")
+      .set("spark.sql.shuffle.partitions", "7")
+    val c = graft.Main.sessionConf(submitted, Map("SPARK_GRAFT_CPUS" -> "4"))
+    assert(c.get("spark.master") == "local-cluster[2,1,1024]")
+    assert(c.get("spark.sql.shuffle.partitions") == "7")
+    assert(c.get("spark.sql.adaptive.enabled") == "true")
+    assert(!submitted.contains("spark.app.name"), "the submitted conf is not mutated")
+    val bare = graft.Main.sessionConf(new SparkConf(false), Map.empty)
+    assert(bare.get("spark.master") == "local[32]")
+    assert(bare.get("spark.sql.shuffle.partitions") == "32")
+    assert(bare.get("spark.app.name") == "graft-kg-pipeline")
+    assert(bare.get("spark.sql.session.timeZone") == "UTC")
+    val env = graft.Main.sessionConf(new SparkConf(false),
+      Map("SPARK_GRAFT_CPUS" -> "4", "SPARK_GRAFT_MASTER" -> "local[2]"))
+    assert(env.get("spark.master") == "local[2]")
+    assert(env.get("spark.sql.shuffle.partitions") == "4")
+  }
+
   test("S2: reference ndjson cache import (README.md:78-80 lines)") {
     val f = java.nio.file.Files.createTempFile("cache", ".ndjson")
     java.nio.file.Files.writeString(f,
