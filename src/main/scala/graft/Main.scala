@@ -54,7 +54,7 @@ object Main {
   }
 
   /** Order-independent distributed corpus fingerprint — the resumability
-    * keystone (stage fingerprints chain from it). Each row's sha256 of
+    * keystone (every stage's input fingerprint). Each row's sha256 of
     * `content` is sliced into four 15-hex (60-bit) integers; each partition
     * sums them exactly, and one RDD `fold` (not `reduce`: an RDD may have
     * no partitions) merges the partitions — one pass, one Spark job, O(1)
@@ -75,69 +75,52 @@ object Main {
   }
 
   /** One partition's (row count, non-null hash count, four slice sums) of
-    * [[corpusFingerprint]]. A slice is < 2^60, so a Long sum below 2^62
-    * takes one more without overflow; it spills into a `BigInteger` there.
+    * [[corpusFingerprint]].
     */
   private def sliceSums(rows: Iterator[InternalRow]): Array[BigInteger] = {
-    val spill = 1L << 62
     var n = 0L
     var hashed = 0L
-    val low = new Array[Long](4)
-    val high = Array.fill(4)(BigInteger.ZERO)
+    val sums = Array.fill(4)(BigInteger.ZERO)
     rows.foreach { r =>
       n += 1
       if (!r.isNullAt(0)) {
         hashed += 1
         val hex = r.getUTF8String(0).toString
-        var i = 0
-        while (i < 4) {
-          low(i) += java.lang.Long.parseLong(hex, i * 16, i * 16 + 15, 16)
-          if (low(i) >= spill) {
-            high(i) = high(i).add(BigInteger.valueOf(low(i)))
-            low(i) = 0
-          }
-          i += 1
-        }
+        for (i <- 0 until 4)
+          sums(i) = sums(i).add(BigInteger.valueOf(
+            java.lang.Long.parseLong(hex, i * 16, i * 16 + 15, 16)))
       }
     }
-    Array(BigInteger.valueOf(n), BigInteger.valueOf(hashed)) ++
-      high.zip(low).map { case (h, l) => h.add(BigInteger.valueOf(l)) }
+    Array(BigInteger.valueOf(n), BigInteger.valueOf(hashed)) ++ sums
   }
 
   /** The resumable staged pipeline (separated from main so tests can drive
     * it on a shared session). Returns the triple count: the `rows` of the
     * committed `triples` manifest, which `writeStage` counted from the
-    * committed snapshot, so a resume re-scans nothing.
-    *
-    * Each stage's fingerprint chains its name, its parameters and its
-    * input stages' fingerprints ([[Manifest.stageFingerprint]]), down to
-    * the corpus fingerprint of the source: a stage resumes only when
-    * everything it depends on is unchanged (a `--canon` toggle recomputes
-    * `triples`). A fresh resume runs one Spark job, the fingerprint scan.
+    * committed snapshot, so a resume re-scans nothing. Every stage is
+    * fingerprinted with the corpus fingerprint; a fresh resume runs one
+    * Spark job, the fingerprint scan.
     */
   def run(spark: SparkSession, sfDir: String, warehouse: String,
       canon: Boolean): Long = {
     val docs = Tables.docsDf(spark, sfDir)
     val corpusFp = Main.corpusFingerprint(docs)
-    def stage(name: String, partitionCols: Seq[String], inputFps: Seq[String],
-        params: Seq[String] = Nil)(compute: => DataFrame): (DataFrame, String) = {
-      val fp = Manifest.stageFingerprint(name, params, inputFps)
-      (Manifest.runStage(spark, warehouse, name, partitionCols, fp)(compute), fp)
-    }
-    val part = Seq("repo", "lang")
 
-    val (docsCommitted, docsFp) = stage("docs", part, Seq(corpusFp))(docs)
+    val docsCommitted = Manifest.runStage(spark, warehouse, "docs",
+      Seq("repo", "lang"), corpusFp)(docs)
 
-    val (mentions, mentionsFp) = stage("mentions", part, Seq(docsFp)) {
+    val mentions = Manifest.runStage(spark, warehouse, "mentions",
+      Seq("repo", "lang"), corpusFp) {
       KgPipeline.sentenceMentions(docsCommitted)
     }
 
-    val (links, linksFp) = stage("links", part, Seq(mentionsFp)) {
+    val links = Manifest.runStage(spark, warehouse, "links",
+      Seq("repo", "lang"), corpusFp) {
       KgPipeline.links(spark, mentions)
     }
 
     val canonMap = if (canon) Some(
-      stage("canon_map", Seq.empty, Seq(linksFp)) {
+      Manifest.runStage(spark, warehouse, "canon_map", Seq.empty, corpusFp) {
         KgPipeline.canonMap(spark, links)
       }) else None
 
@@ -147,9 +130,9 @@ object Main {
     // rows can span read partitions — the co-partitioned-duplicates
     // contract LocalDistinct needs does not hold on snapshot reads, only
     // on the in-memory narrow lineage.
-    stage("triples", part, linksFp +: canonMap.map(_._2).toSeq,
-        params = Seq(s"canon=$canon")) {
-      KgPipeline.linkTriples(links, canonMap.map(_._1))
+    Manifest.runStage(spark, warehouse, "triples",
+      Seq("repo", "lang"), corpusFp) {
+      KgPipeline.linkTriples(links, canonMap)
     }
 
     Manifest.committedRows(spark, warehouse, "triples")

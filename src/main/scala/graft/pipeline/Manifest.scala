@@ -165,16 +165,6 @@ object Manifest {
     readManifest(spark, warehouse, stage).flatMap(readRows).getOrElse(
       throw new IllegalStateException(s"no committed rows for stage $stage in $warehouse"))
 
-  /** A stage's input fingerprint, chained like a lineage: sha256 of the
-    * stage name, its parameters (`key=value`) and the fingerprints of its
-    * inputs (the corpus fingerprint for a source stage). A change anywhere
-    * upstream, or in a parameter, changes every fingerprint downstream of it.
-    * Driver-only string hashing; no Spark job.
-    */
-  def stageFingerprint(stage: String, params: Seq[String], inputs: Seq[String]): String =
-    graft.functions.Text.sha256HexScalar(
-      Seq(stage, params.mkString(","), inputs.mkString(",")).mkString("|"))
-
   /** The committed relation's schema; `None` for a manifest without one
     * (or with a schema that no longer parses), which reads as not fresh.
     */
