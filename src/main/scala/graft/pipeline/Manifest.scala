@@ -31,6 +31,18 @@ object Manifest {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Hadoop options of a stage commit, data and manifest alike: a `file:`
+    * warehouse is written through [[NioLocalFileSystem]], which sets the
+    * stock permission bits without forking `chmod`. Uncached, since the
+    * FileSystem cache keys on scheme and user, not on the conf. Spark copies
+    * writer options into the write's Hadoop conf, which reaches the job
+    * committer and every task, so the session's filesystems stay stock;
+    * other schemes ignore the `file` key.
+    */
+  private val commitFsOptions = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   def manifestPath(warehouse: String, stage: String): String =
     s"$warehouse/$stage/_manifest.json"
 
@@ -67,7 +79,7 @@ object Manifest {
     val toWrite =
       if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*)
       else df
-    val writer = toWrite.write.mode("overwrite")
+    val writer = toWrite.write.options(commitFsOptions).mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(out)
     // Lineage metrics from the COMMITTED snapshot, not from a cache of the
@@ -102,7 +114,12 @@ object Manifest {
         s""""partitions":$parts,""" +
         s""""schema":${jsonStr(df.schema.json)}}"""
     val p = new org.apache.hadoop.fs.Path(manifestPath(warehouse, stage))
-    val o = fs(spark, warehouse).create(p, true)
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    commitFsOptions.foreach { case (k, v) => conf.set(k, v) }
+    // Not closed: the uncached local instance holds no resources, and any
+    // other scheme returns the session's cached instance, which stays open.
+    val o = p.getFileSystem(conf).create(p, true)
     try o.write(manifest.getBytes("UTF-8")) finally o.close()
     committed
   }

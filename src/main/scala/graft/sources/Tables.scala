@@ -42,8 +42,16 @@ object Tables {
   def nation(spark: SparkSession, dir: String): DataFrame =
     read(spark, dir, "nation")
 
+  /** The `events` table's schema, declared like [[documentsSchema]]: every
+    * sf table and the benchmark's copy (pyarrow `timestamp("us")`, no
+    * zone) have these types, and each stream replay reads `events`.
+    */
+  private[graft] val eventsSchema: StructType = StructType.fromDDL(
+    "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, " +
+      "value DOUBLE, props STRING")
+
   def events(spark: SparkSession, dir: String): DataFrame =
-    read(spark, dir, "events")
+    spark.read.schema(eventsSchema).parquet(s"$dir/events.parquet")
 
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     read(spark, dir, "embeddings")

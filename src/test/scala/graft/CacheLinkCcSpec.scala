@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
-import graft.pipeline.{KgPipeline, Manifest}
+import graft.pipeline.{KgPipeline, Manifest, NioRawLocalFileSystem}
 
 /** J1 cache equivalence, O2 retention, J2 linking determinism, J3 connected
   * components (fixpoint + vs union-find), and manifest resume.
@@ -517,5 +517,76 @@ class CacheLinkCcSpec extends AnyFunSuite {
       assert(computes == before + 1 && resumeJobs.isEmpty,
         s"$variant: after the recompute it resumes")
     }
+  }
+
+  private def unixMode(p: java.nio.file.Path): Int =
+    java.nio.file.Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+
+  private def octal(s: String): Int = Integer.parseInt(s, 8)
+
+  test("NioRawLocalFileSystem.setPermission leaves the bits of the stock forked chmod") {
+    import java.nio.file.{Files, Path => NioPath}
+    import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val conf = spark.sparkContext.hadoopConfiguration
+    val stock = new RawLocalFileSystem
+    val nio = new NioRawLocalFileSystem
+    Seq(stock, nio).foreach(_.initialize(java.net.URI.create("file:///"), conf))
+    val root = tmpDir("perm-twin")
+    // each fs gets its own fresh target, set up alike; returns the mode both leave
+    def twin(name: String, dir: Boolean, initial: Option[Int], mode: Int): Int = {
+      val Seq(a, b) = Seq(stock, nio).map { fs =>
+        val p = java.nio.file.Paths.get(root, s"$name-${fs.getClass.getSimpleName}")
+        if (dir) Files.createDirectory(p) else Files.createFile(p)
+        initial.foreach(m => Files.setAttribute(p, "unix:mode", Int.box(m)))
+        // a plain mode on a plain target must take the java.nio path
+        val current = Files.getAttribute(p, "unix:mode").asInstanceOf[Int]
+        assert(NioRawLocalFileSystem.posixBits(mode, current).isDefined ==
+          (((mode | current) & octal("7000")) == 0), f"$name: $current%o")
+        fs.setPermission(new Path(p.toUri), new FsPermission(mode.toShort))
+        p
+      }
+      def perms(p: NioPath) = (Files.getPosixFilePermissions(p), unixMode(p))
+      assert(perms(a) == perms(b), s"$name: stock ${perms(a)}, nio ${perms(b)}")
+      unixMode(a)
+    }
+    for (m <- Seq("0000", "0600", "0644", "0700", "0755", "0777"); dir <- Seq(false, true))
+      assert(twin(s"m$m-$dir", dir, None, octal(m)) == octal(m))
+    // sticky: no rwx set can say it, so it takes the forked fallback
+    assert(NioRawLocalFileSystem.posixBits(octal("1777"), 0).isEmpty)
+    assert(twin("sticky", dir = true, None, octal("1777")) == octal("1777"))
+    // `chmod 0755` keeps a directory's setgid bit; chmod(2) would clear it
+    assert(twin("setgid", dir = true, Some(octal("2775")), octal("0755")) == octal("2755"))
+  }
+
+  test("a stage commit leaves Hadoop's default permissions under the conf's umask") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.permission.FsPermission
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val saved = Option(hconf.get(FsPermission.UMASK_LABEL))
+    // the default umask, then one the process umask (022) would not give
+    for (umask <- Seq(None, Some("027"))) try {
+      umask.foreach(hconf.set(FsPermission.UMASK_LABEL, _))
+      val mask = FsPermission.getUMask(hconf)
+      val fileMode = FsPermission.getFileDefault.applyUMask(mask).toShort.toInt
+      val dirMode = FsPermission.getDirDefault.applyUMask(mask).toShort.toInt
+      val wh = tmpDir("warehouse-perms")
+      Manifest.writeStage(spark, Fixtures.docsDf(60), wh, "docs", Seq("repo", "lang"))
+      val stageDir = java.nio.file.Paths.get(wh, "docs")
+      val (dirs, files) = java.nio.file.Files.walk(stageDir).iterator.asScala.toSeq
+        .partition(java.nio.file.Files.isDirectory(_))
+      val names = files.map(_.getFileName.toString)
+      assert(Seq("_SUCCESS", "_manifest.json", "._manifest.json.crc").forall(names.contains),
+        s"$umask: $names")
+      assert(names.exists(_.endsWith(".parquet")) &&
+        names.exists(n => n.startsWith(".part-") && n.endsWith(".crc")))
+      assert(dirs.exists(_.getFileName.toString.startsWith("repo=")) &&
+        dirs.exists(_.getFileName.toString.startsWith("lang=")))
+      for (f <- files) assert(unixMode(f) == fileMode,
+        f"$umask: $f is ${unixMode(f)}%o, want $fileMode%o")
+      for (d <- dirs) assert(unixMode(d) == dirMode,
+        f"$umask: $d is ${unixMode(d)}%o, want $dirMode%o")
+    } finally saved.fold(hconf.unset(FsPermission.UMASK_LABEL))(
+      hconf.set(FsPermission.UMASK_LABEL, _))
   }
 }

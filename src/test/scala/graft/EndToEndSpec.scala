@@ -321,6 +321,17 @@ class EndToEndSpec extends AnyFunSuite {
     assert(jobs.size == 1, s"a resume reads metadata only; got jobs $jobs")
   }
 
+  test("Tables.events: the declared schema is every sf table's, and a read launches no job") {
+    val root = new java.io.File(dir).getParent
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val inferred = spark.read.parquet(s"$root/$sf/events.parquet").schema
+      assert(inferred == Tables.eventsSchema, s"$sf: ${inferred.toDDL}")
+    }
+    val (events, jobs) = Fixtures.jobsDuring(spark)(Tables.events(spark, dir))
+    assert(jobs.isEmpty, s"the events read inferred its schema: $jobs")
+    assert(events.count() == spark.read.parquet(s"$dir/events.parquet").count())
+  }
+
   test("Main.sessionConf: a submitted master and partition count win; a bare run gets the defaults") {
     import org.apache.spark.SparkConf
     val submitted = new SparkConf(false)
