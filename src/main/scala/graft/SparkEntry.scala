@@ -91,7 +91,7 @@ object SparkEntry {
     * sampling pass executes that serial lineage a SECOND time before the
     * exchange recomputes it (noop-sink timing reads ~1.9x the count-action
     * timing, whose optimized plan drops the sort — both measured,
-    * OPTIMIZATION_r08.md / graft.BenchExtra). Spreading the base rows
+    * OPTIMIZATION_r08.md / graft.tools.Measure). Spreading the base rows
     * round-robin across the app's cores parallelizes every pass either
     * action runs (mm_video ~2.2x under count, ~3.6x under noop); the
     * exchange moves only the narrow (doc_id, text) scan output, the
@@ -1325,9 +1325,10 @@ object SparkEntry {
     // (flatMapGroupsWithState + EventTimeTimeout) run for real over a
     // finite replay of the events table, one micro-batch per UTC day. The
     // DuckDB twin predicts the post-eviction totals from the same
-    // watermark/timeout arithmetic (probed, not assumed — HorizonProbe /
-    // AnalysisStreamingSpec): watermark before a day's batch = floor-ms
-    // max event time of all prior days minus the delay; a key whose
+    // watermark/timeout arithmetic (probed, not assumed — pinned by the
+    // AnalysisStreamingSpec "streaming: horizon …" specs): watermark
+    // before a day's batch = floor-ms max event time of all prior days
+    // minus the delay; a key whose
     // (last event + horizon) is STRICTLY below that watermark is evicted
     // in a no-data batch before its next event, restarting its totals.
     // Values are floor(value*2^20)-quantized (the ann_ivf_trained trick)
@@ -1374,11 +1375,12 @@ object SparkEntry {
     // ms-floored min event time, duplicated 2× byte-identically so the
     // in-batch drop path runs without order ambiguity. The DuckDB twin
     // walks each key's day sequence with the PROBED state arithmetic
-    // (HorizonProbe dprobe1-5, spec-pinned): expiry = emitted ts +
-    // horizon, eviction on watermark >= expiry (EQUALITY evicts — the
-    // opposite polarity of flatMapGroupsWithState's strict timeout),
-    // duplicates do not extend the stored expiry, and the no-data batch
-    // evicts before a key's re-arrival. At sf0.01 the 12h horizon splits
+    // (pinned by the AnalysisStreamingSpec "streaming: dedup horizon …"
+    // specs): expiry = emitted ts + horizon, eviction on watermark >=
+    // expiry (EQUALITY evicts — the opposite polarity of
+    // flatMapGroupsWithState's strict timeout), duplicates do not extend
+    // the stored expiry, and the no-data batch evicts before a key's
+    // re-arrival. At sf0.01 the 12h horizon splits
     // the fixture ~half emit (2137, of them 1987 evict-and-re-emits) /
     // half dedup-drop (1869) — both paths exercised, not vacuously green.
     QuerySpec("stream_dedup_horizon",

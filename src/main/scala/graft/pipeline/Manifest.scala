@@ -1,8 +1,11 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.JsonUtil
 
 /** Per-stage checkpoint commits with lineage + row-count metrics — the
   * north rule's "resumes from the last committed Iceberg snapshot" clause,
@@ -14,8 +17,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * A stage commit is atomic-enough for resume purposes: data lands first,
   * the manifest (with per-partition row counts, the input fingerprint and
   * the committed relation's schema) lands last; [[runStage]] recomputes
-  * only when no manifest exists, the input fingerprint changed, or the
-  * manifest carries no schema (one written before the field existed).
+  * only when no manifest exists, the input fingerprint changed, the
+  * manifest carries no schema (one written before the field existed), or
+  * it does not parse. [[graft.JsonUtil]]'s jackson mapper writes and reads
+  * it.
   *
   * Like an Iceberg snapshot's metadata, the manifest carries the schema,
   * so a stage read infers nothing: no footer-reading schema-inference job,
@@ -24,12 +29,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * schema.
   */
 object Manifest {
-
-  final case class PartitionMetric(partition: String, rows: Long)
-
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Hadoop options of a stage commit, data and manifest alike: a `file:`
     * warehouse is written through [[NioLocalFileSystem]], which sets the
@@ -46,13 +45,9 @@ object Manifest {
   def manifestPath(warehouse: String, stage: String): String =
     s"$warehouse/$stage/_manifest.json"
 
-  def exists(spark: SparkSession, warehouse: String, stage: String): Boolean =
-    fs(spark, warehouse)
-      .exists(new org.apache.hadoop.fs.Path(manifestPath(warehouse, stage)))
-
   def readManifest(spark: SparkSession, warehouse: String, stage: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(manifestPath(warehouse, stage))
-    val f = fs(spark, warehouse)
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(p)) None
     else {
       val in = f.open(p)
@@ -103,16 +98,18 @@ object Manifest {
             r.getLong(partitionCols.length))
           .toSeq.sortBy(_._1)
       else Seq("(all)" -> committed.count())
-    val total = perPart.map(_._2).sum
-    val parts = perPart.map { case (p, n) =>
-      s"""{"partition":${jsonStr(p)},"rows":$n}"""
-    }.mkString("[", ",", "]")
-    val manifest =
-      s"""{"stage":${jsonStr(stage)},"rows":$total,""" +
-        s""""input_fingerprint":${jsonStr(inputFingerprint)},""" +
-        s""""partition_cols":${partitionCols.map(jsonStr).mkString("[", ",", "]")},""" +
-        s""""partitions":$parts,""" +
-        s""""schema":${jsonStr(df.schema.json)}}"""
+    // Key order is part of the format: `rows` precedes `partitions`, so a
+    // first-match `"rows":` reader takes the top-level total.
+    val m = JsonUtil.mapper.createObjectNode()
+      .put("stage", stage)
+      .put("rows", perPart.map(_._2).sum)
+      .put("input_fingerprint", inputFingerprint)
+    val cols = m.putArray("partition_cols")
+    partitionCols.foreach(c => cols.add(c))
+    val parts = m.putArray("partitions")
+    perPart.foreach { case (p, n) => parts.addObject().put("partition", p).put("rows", n) }
+    m.put("schema", df.schema.json)
+    val manifest = JsonUtil.mapper.writeValueAsString(m)
     val p = new org.apache.hadoop.fs.Path(manifestPath(warehouse, stage))
     val conf = new org.apache.hadoop.conf.Configuration(
       spark.sparkContext.hadoopConfiguration)
@@ -124,69 +121,28 @@ object Manifest {
     committed
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** A top-level string field of a parsed manifest. */
+  private def text(m: JsonNode, key: String): Option[String] =
+    Option(m.get(key)).filter(_.isTextual).map(_.textValue)
 
-  private def jsonUnescape(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => b += '"'; i += 2
-          case '\\' => b += '\\'; i += 2
-          case 'u' if i + 6 <= s.length &&
-              s.substring(i + 2, i + 6).forall(c =>
-                Character.digit(c, 16) >= 0) =>
-            b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case other => b += other; i += 2
-        }
-      } else { b += c; i += 1 }
-    }
-    b.toString
-  }
-
-  /** Extract a top-level string FIELD from a manifest — a key-anchored
-    * parse, not a substring scan: the field's value appearing inside
-    * another field (a partition name, the schema JSON) must not read as
-    * that field. Inside an escaped JSON string the quote characters are
-    * `\"`, so the `"key":"` anchor can only match a real top-level key
-    * this writer emitted.
+  /** The top-level `input_fingerprint` field; `None` for a manifest that
+    * does not parse (the stage then recomputes).
     */
-  private def readField(manifest: String, key: String): Option[String] =
-    raw""""$key":"((?:[^"\\]|\\.)*)"""".r
-      .findFirstMatchIn(manifest)
-      .map(m => jsonUnescape(m.group(1)))
-
-  /** The top-level `input_fingerprint` field, parsed leniently. */
   private[graft] def readFingerprint(manifest: String): Option[String] =
-    readField(manifest, "input_fingerprint")
-
-  /** The top-level `rows` field: the committed snapshot's row total. The
-    * writer emits it before `partitions`, so the first `"rows":` key is the
-    * top-level one; a `"rows":` inside a string value is escaped (`\"`) and
-    * cannot match.
-    */
-  private def readRows(manifest: String): Option[Long] =
-    """"rows":(\d+)""".r.findFirstMatchIn(manifest).map(_.group(1).toLong)
+    JsonUtil.parse(manifest).flatMap(text(_, "input_fingerprint"))
 
   /** The committed row total of `stage`, from its manifest (no scan). */
   def committedRows(spark: SparkSession, warehouse: String, stage: String): Long =
-    readManifest(spark, warehouse, stage).flatMap(readRows).getOrElse(
-      throw new IllegalStateException(s"no committed rows for stage $stage in $warehouse"))
+    readManifest(spark, warehouse, stage).flatMap(JsonUtil.parse)
+      .flatMap(m => Option(m.get("rows")).filter(_.canConvertToLong))
+      .map(_.longValue).getOrElse(
+        throw new IllegalStateException(s"no committed rows for stage $stage in $warehouse"))
 
   /** The committed relation's schema; `None` for a manifest without one
     * (or with a schema that no longer parses), which reads as not fresh.
     */
-  private def readSchema(manifest: String): Option[StructType] =
-    readField(manifest, "schema").flatMap(j =>
+  private def readSchema(m: JsonNode): Option[StructType] =
+    text(m, "schema").flatMap(j =>
       scala.util.Try(DataType.fromJson(j)).toOption.collect {
         case s: StructType => s
       })
@@ -200,8 +156,8 @@ object Manifest {
   def runStage(spark: SparkSession, warehouse: String, stage: String,
       partitionCols: Seq[String], inputFingerprint: String)
       (compute: => DataFrame): DataFrame =
-    readManifest(spark, warehouse, stage)
-      .filter(m => readFingerprint(m).contains(inputFingerprint))
+    readManifest(spark, warehouse, stage).flatMap(JsonUtil.parse)
+      .filter(m => text(m, "input_fingerprint").contains(inputFingerprint))
       .flatMap(readSchema) match {
       case Some(schema) =>
         spark.read.schema(schema).parquet(s"$warehouse/$stage")

@@ -17,18 +17,32 @@ import graft.model.Doc
   */
 object Tables {
 
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
-  /** The `documents` table's schema. Every driver table (sf0.001 to sf0.1)
-    * and the benchmark's copy have exactly these types, so a read with it
-    * launches no footer-reading schema-inference job.
+  /** Every driver table's schema. Each sf dir (sf0.001 to sf0.1) and the
+    * benchmark's copies have exactly these types (timestamps are pyarrow
+    * `timestamp("us")`, no zone), so a read launches no footer-reading
+    * schema-inference job.
     */
-  private val documentsSchema: StructType = StructType.fromDDL(
-    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
+  private[graft] val schemas: Map[String, StructType] = Map(
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
+  def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(schemas(name)).parquet(s"$dir/$name.parquet")
 
   def documents(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(documentsSchema).parquet(s"$dir/documents.parquet")
+    read(spark, dir, "documents")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame =
     read(spark, dir, "lineitem")
@@ -42,16 +56,8 @@ object Tables {
   def nation(spark: SparkSession, dir: String): DataFrame =
     read(spark, dir, "nation")
 
-  /** The `events` table's schema, declared like [[documentsSchema]]: every
-    * sf table and the benchmark's copy (pyarrow `timestamp("us")`, no
-    * zone) have these types, and each stream replay reads `events`.
-    */
-  private[graft] val eventsSchema: StructType = StructType.fromDDL(
-    "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, " +
-      "value DOUBLE, props STRING")
-
   def events(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(eventsSchema).parquet(s"$dir/events.parquet")
+    read(spark, dir, "events")
 
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     read(spark, dir, "embeddings")

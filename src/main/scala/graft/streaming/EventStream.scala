@@ -160,8 +160,9 @@ object EventStream {
     * re-arrived key shows its restarted session — the semantics the gate
     * exists to pin cross-engine).
     *
-    * Probed semantics the twin replicates (graft.tools.HorizonProbe; each
-    * pinned in AnalysisStreamingSpec):
+    * Probed semantics the twin replicates, each pinned by an
+    * AnalysisStreamingSpec "streaming: horizon timeout…"/"horizon
+    * watermark…" spec:
     *  - after a data batch advances the watermark, a NO-DATA batch runs and
     *    processes expired timeouts — so a key is evicted BEFORE its next
     *    data batch even when that batch carries its re-arrival;
@@ -291,8 +292,8 @@ object EventStream {
     * a key whose state the watermark evicted re-emits — the bounded-state
     * dedup semantics the gate pins cross-engine.
     *
-    * Probed semantics the twin replicates (graft.tools.HorizonProbe
-    * dprobe1-5; pinned in AnalysisStreamingSpec):
+    * Probed semantics the twin replicates, each pinned by an
+    * AnalysisStreamingSpec "streaming: dedup horizon…" spec:
     *  - state expiry is (event time + watermark delay), NOT bare ts;
     *  - eviction fires on watermark >= expiry (EQUALITY evicts — the
     *    OPPOSITE polarity of flatMapGroupsWithState's strict timeout <

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import graft.JsonUtil.str
 import graft.functions.Text
 import graft.operators.Tagger
 
@@ -37,16 +38,15 @@ object DumpSpanGoldens {
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/span_goldens.json"
-    import DumpSplitGoldens.jsonStr
     val items = randomTexts.map { t =>
       val cleaned = Text.cleanupScalar(t)
       val tags = Tagger.tagScalar(cleaned).map(e =>
-        s"""[${jsonStr(e.label)}, ${jsonStr(e.text)}, ${e.begin}, ${e.end}, ${e.confidence}]""")
-      s"{\"text\": ${jsonStr(t)}, \"tags\": [${tags.mkString(",")}]}"
+        s"""[${str(e.label)}, ${str(e.text)}, ${e.begin}, ${e.end}, ${e.confidence}]""")
+      s"{\"text\": ${str(t)}, \"tags\": [${tags.mkString(",")}]}"
     }
     val sql = Tagger.tagSpansSqlDuck(Seq("tid"),
       Text.cleanupSqlDuck("txt"), "texts tx")
-    val json = s"""{"span_sql": ${jsonStr(sql)},
+    val json = s"""{"span_sql": ${str(sql)},
       |"items": [${items.mkString(",\n")}]}""".stripMargin
     Files.writeString(Paths.get(out), json)
     println(s"[goldens] ${randomTexts.length} span fixtures -> $out")

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import graft.JsonUtil.str
 import graft.operators.{Chunker, Splitter}
 
 /** Dumps (a) a punctuation-rich fixture set with the scalar splitter's and
@@ -53,32 +54,22 @@ object DumpSplitGoldens {
     }
   }
 
-  def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/split_goldens.json"
     val maxNoSplit = 200
-    def arr(xs: Seq[String]) = xs.map(jsonStr).mkString("[", ",", "]")
+    def arr(xs: Seq[String]) = xs.map(str).mkString("[", ",", "]")
     val items = texts.map { t =>
       val sents = Splitter.splitScalar(t)
       val chunks =
         if (t.length <= maxNoSplit) Seq(t)
         else Chunker.chunkScalar(Splitter.splitScalar(t), maxNoSplit)
-      s"{\"text\": ${jsonStr(t)}, \"sentences\": ${arr(sents)}, \"chunks\": ${arr(chunks)}}"
+      s"{\"text\": ${str(t)}, \"sentences\": ${arr(sents)}, \"chunks\": ${arr(chunks)}}"
     }
     val splitSql = Splitter.splitSqlDuck(Seq("tid"), "txt", "texts tx")
     val chunkSql = Chunker.chunkSqlDuck(Seq("tid"), "txt", "texts", maxNoSplit)
     val json = s"""{"max_no_split": $maxNoSplit,
-      |"split_sql": ${jsonStr(splitSql)},
-      |"chunk_sql": ${jsonStr(chunkSql)},
+      |"split_sql": ${str(splitSql)},
+      |"chunk_sql": ${str(chunkSql)},
       |"items": [${items.mkString(",\n")}]}""".stripMargin
     Files.writeString(Paths.get(out), json)
     println(s"[goldens] ${texts.length} fixtures -> $out")

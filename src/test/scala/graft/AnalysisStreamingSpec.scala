@@ -338,7 +338,7 @@ class AnalysisStreamingSpec extends AnyFunSuite {
   /** Replay crafted batches through dedupDocsWithHorizon (1h horizon) and
     * return the emitted (doc_id, ts-string) rows — the probe harness for
     * the dropDuplicatesWithinWatermark state arithmetic the
-    * stream_dedup_horizon twin replicates (HorizonProbe dprobe1-5).
+    * stream_dedup_horizon twin replicates (the specs below pin each rule).
     */
   private def runDedupBatches(name: String,
       batches: Seq[Seq[(Long, String, String)]]): Seq[(Long, String)] = {
@@ -569,7 +569,7 @@ class AnalysisStreamingSpec extends AnyFunSuite {
   }
 
   // --- probed timeout semantics the stream_horizon oracle twin replicates
-  // (graft.tools.HorizonProbe; these pin them against Spark upgrades) -----
+  // (each probed here; these pin them against Spark upgrades) ------------
 
   private def runHorizonBatches(name: String,
       batches: Seq[Seq[(Long, Double, String)]]): Seq[(Long, Long, Double)] = {

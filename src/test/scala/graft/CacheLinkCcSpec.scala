@@ -405,8 +405,17 @@ class CacheLinkCcSpec extends AnyFunSuite {
     Manifest.runStage(spark, wh, "docs", Seq("lang"), "fp-B")(stage())
     assert(computes == 2, "fingerprint change must recompute")
 
-    val m = Manifest.readManifest(spark, wh, "docs").get
-    assert(m.contains("\"rows\":50") && m.contains("\"partitions\":["))
+    // The full manifest: compact, keys in writer order, and the top-level
+    // `rows` before `partitions` (a first-match `"rows":` reader takes the
+    // total). Manifests already on disk have these bytes and stay fresh.
+    val fields = Seq("repo", "path", "commit", "lang", "content").map(c =>
+      s"""{\\"name\\":\\"$c\\",\\"type\\":\\"string\\",\\"nullable\\":true,\\"metadata\\":{}}""")
+    val expected = """{"stage":"docs","rows":50,"input_fingerprint":"fp-B",""" +
+      """"partition_cols":["lang"],"partitions":[{"partition":"java","rows":9},""" +
+      """{"partition":"md","rows":12},{"partition":"py","rows":11},""" +
+      """{"partition":"scala","rows":9},{"partition":"txt","rows":9}],""" +
+      s""""schema":"{\\"type\\":\\"struct\\",\\"fields\\":[${fields.mkString(",")}]}"}"""
+    assert(Manifest.readManifest(spark, wh, "docs").get == expected)
   }
 
   test("manifest fingerprint is FIELD-parsed: colliding substring elsewhere doesn't read fresh") {
@@ -420,12 +429,12 @@ class CacheLinkCcSpec extends AnyFunSuite {
     // escaped value round-trips
     val esc = """{"input_fingerprint":"a\"b\\c"}"""
     assert(Manifest.readFingerprint(esc).contains("a\"b\\c"))
-    // corrupt manifests must parse leniently, not throw: a truncated or
-    // invalid \u escape degrades to literal chars (stage then recomputes)
-    assert(Manifest.readFingerprint("{\"input_fingerprint\":\"x\\u004\"}")
-      .contains("xu004"))
-    assert(Manifest.readFingerprint("{\"input_fingerprint\":\"x\\uZZZZy\"}")
-      .contains("xuZZZZy"))
+    // a corrupt manifest (a truncated or invalid \u escape, or an empty
+    // file) does not parse: it has no fingerprint, and reading it does not
+    // throw (the stage then recomputes)
+    assert(Manifest.readFingerprint("{\"input_fingerprint\":\"x\\u004\"}").isEmpty)
+    assert(Manifest.readFingerprint("{\"input_fingerprint\":\"x\\uZZZZy\"}").isEmpty)
+    assert(Manifest.readFingerprint("").isEmpty)
 
     // end-to-end: a fingerprint equal to the FAKE blob must recompute
     val wh = tmpDir("warehouse-fp")
@@ -502,7 +511,11 @@ class CacheLinkCcSpec extends AnyFunSuite {
     assert(earlier != current && !earlier.contains("\"schema\""))
     // a schema that no longer parses reads as not fresh too, not as a throw
     val corrupt = current.replaceFirst(schemaField, ""","schema":"{"}""")
-    for ((variant, manifest) <- Seq("no schema" -> earlier, "corrupt schema" -> corrupt)) {
+    // a manifest that does not parse at all (an invalid \u escape)
+    val unparseable = current.replace("\"fp\"", "\"f\\uZZZZp\"")
+    assert(unparseable != current)
+    for ((variant, manifest) <- Seq("no schema" -> earlier,
+        "corrupt schema" -> corrupt, "unparseable" -> unparseable)) {
       // through the Hadoop filesystem, so the checksum file stays consistent
       val p = new org.apache.hadoop.fs.Path(Manifest.manifestPath(wh, "docs"))
       val o = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)

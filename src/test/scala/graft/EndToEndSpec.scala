@@ -263,8 +263,8 @@ class EndToEndSpec extends AnyFunSuite {
     val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
     val n1 = graft.Main.run(spark, dir, wh, canon = true)
     assert(n1 > 0)
-    assert(graft.pipeline.Manifest.exists(spark, wh, "triples"))
-    assert(graft.pipeline.Manifest.exists(spark, wh, "canon_map"))
+    assert(graft.pipeline.Manifest.readManifest(spark, wh, "triples").isDefined)
+    assert(graft.pipeline.Manifest.readManifest(spark, wh, "canon_map").isDefined)
     // second run: same corpus fingerprint -> resumes, same count, and the
     // triples manifest content is unchanged (no recompute/rewrite)
     val m1 = graft.pipeline.Manifest.readManifest(spark, wh, "triples").get
@@ -322,14 +322,25 @@ class EndToEndSpec extends AnyFunSuite {
   }
 
   test("Tables.events: the declared schema is every sf table's, and a read launches no job") {
+    // Covers every table, not only events: each reads through Tables.read.
     val root = new java.io.File(dir).getParent
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val inferred = spark.read.parquet(s"$root/$sf/events.parquet").schema
-      assert(inferred == Tables.eventsSchema, s"$sf: ${inferred.toDDL}")
+    val reads = Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)](
+      "documents" -> Tables.documents, "lineitem" -> Tables.lineitem,
+      "orders" -> Tables.orders, "customer" -> Tables.customer,
+      "nation" -> Tables.nation, "events" -> Tables.events,
+      "embeddings" -> Tables.embeddings)
+    assert(reads.map(_._1).toSet == Tables.schemas.keySet)
+    val failures = reads.flatMap { case (table, read) =>
+      val drift = Seq("sf0.001", "sf0.01", "sf0.1").flatMap { sf =>
+        val inferred = spark.read.parquet(s"$root/$sf/$table.parquet").schema
+        Option.when(inferred != Tables.schemas(table))(s"$sf/$table: ${inferred.toDDL}")
+      }
+      val (df, jobs) = Fixtures.jobsDuring(spark)(read(spark, dir))
+      drift ++ Option.when(jobs.nonEmpty)(s"the $table read inferred its schema: $jobs") ++
+        Option.when(df.count() != spark.read.parquet(s"$dir/$table.parquet").count())(
+          s"$table: row count differs")
     }
-    val (events, jobs) = Fixtures.jobsDuring(spark)(Tables.events(spark, dir))
-    assert(jobs.isEmpty, s"the events read inferred its schema: $jobs")
-    assert(events.count() == spark.read.parquet(s"$dir/events.parquet").count())
+    assert(failures.isEmpty, failures.mkString("; "))
   }
 
   test("Main.sessionConf: a submitted master and partition count win; a bare run gets the defaults") {
