@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.Text
-import graft.model.Doc
 import graft.operators._
 import graft.pipeline.KgPipeline
 import graft.sources.Tables

@@ -6,7 +6,7 @@ package graft.model
   * an Iceberg-shaped table of source-code repositories
   * `(repo, path, commit, lang, content)`. The driver bench tables
   * (`documents.parquet`) are mapped onto this shape by
-  * [[graft.sources.Tables.docs]].
+  * [[graft.sources.Tables.docsDf]].
   */
 final case class Doc(
     repo: String,
@@ -14,17 +14,6 @@ final case class Doc(
     commit: String,
     lang: String,
     content: String)
-
-/** One sentence of a document, order preserved (reference
-  * `splitServer.py:39-43`, README.md:181 — sentence order guarantee).
-  */
-final case class SentenceRow(
-    repo: String,
-    path: String,
-    commit: String,
-    lang: String,
-    sentIdx: Int,
-    sentence: String)
 
 /** A recognized entity mention with span info, mirroring the flair
   * `Sentence.to_dict()` entity shape the reference emits at

@@ -53,31 +53,28 @@ object Multimodal {
     * is irrelevant to the metadata contract, validity to ImageIO is not.
     */
   def encodeBmpScalar(w: Int, h: Int, seed: Array[Byte]): Array[Byte] = {
-    val rowSize = ((w * 3 + 3) / 4) * 4
-    val dataSize = rowSize * h
-    val fileSize = 54 + dataSize
-    val out = new Array[Byte](fileSize)
-    def le32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte
-      out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte
-      out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    out(0) = 'B'; out(1) = 'M'
-    le32(2, fileSize) // bytes 3-6: file size, little-endian
-    le32(10, 54) // pixel data offset
-    le32(14, 40) // BITMAPINFOHEADER size
-    le32(18, w)
-    le32(22, h)
-    out(26) = 1 // planes
-    out(28) = 24 // bpp
-    le32(34, dataSize)
+    val out = new Array[Byte](54 + ((w * 3 + 3) / 4) * 4 * h)
+    writeBmpHeader(out, w, h)
     var i = 54
-    while (i < fileSize) {
+    while (i < out.length) {
       out(i) = if (seed.nonEmpty) seed((i - 54) % seed.length) else 0
       i += 1
     }
     out
+  }
+
+  /** The 54-byte header of [[encodeBmpScalar]]'s layout, file size taken
+    * from `out.length`.
+    */
+  private def writeBmpHeader(out: Array[Byte], w: Int, h: Int): Unit = {
+    val rowSize = ((w * 3 + 3) / 4) * 4
+    def le32(off: Int, v: Int): Unit = (0 until 4).foreach(i =>
+      out(off + i) = ((v >> (8 * i)) & 0xff).toByte)
+    out(0) = 'B'; out(1) = 'M'
+    le32(2, out.length)
+    le32(10, 54); le32(14, 40); le32(18, w); le32(22, h)
+    out(26) = 1; out(28) = 24
+    le32(34, rowSize * h)
   }
 
   private val encodeBmpUdf =
@@ -141,28 +138,10 @@ object Multimodal {
       }
   }
 
-  /** Legacy stub-era payload attach (UTF-8 text bytes as opaque payload) —
-    * still used by `mm_meta`, which checks the Catalyst-side binary
-    * handling (octet_length / header slice) without a codec.
-    */
-  def withPayload(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.withColumn("payload", col(textCol).cast("binary"))
-
   // ---- image resize (decode -> nearest-neighbor downsample -> re-encode) --
 
   final case class ResizedMeta(doc_id: Long, width: Int, height: Int,
       out_width: Int, out_height: Int, out_len: Long)
-
-  private def writeBmpHeader(out: Array[Byte], w: Int, h: Int): Unit = {
-    val rowSize = ((w * 3 + 3) / 4) * 4
-    def le32(off: Int, v: Int): Unit = (0 until 4).foreach(i =>
-      out(off + i) = ((v >> (8 * i)) & 0xff).toByte)
-    out(0) = 'B'; out(1) = 'M'
-    le32(2, out.length)
-    le32(10, 54); le32(14, 40); le32(18, w); le32(22, h)
-    out(26) = 1; out(28) = 24
-    le32(34, rowSize * h)
-  }
 
   /** Re-encode a BufferedImage in the same minimal 24-bpp BMP layout as
     * [[encodeBmpScalar]] (bottom-up BGR rows, 4-byte row padding) — the
@@ -530,6 +509,17 @@ object Multimodal {
       seed: Array[Byte]): Array[Byte] = {
     val dataSize = frames * channels * 2
     val out = new Array[Byte](44 + dataSize)
+    writeWavHeader(out, rate, channels)
+    (0 until dataSize).foreach(i =>
+      out(44 + i) = if (seed.nonEmpty) seed(i % seed.length) else 0)
+    out
+  }
+
+  /** The 44-byte RIFF header of a 16-bit PCM WAV, data size taken from
+    * `out.length`.
+    */
+  private def writeWavHeader(out: Array[Byte], rate: Int, channels: Int): Unit = {
+    val dataSize = out.length - 44
     def ascii(off: Int, s: String): Unit =
       s.getBytes("US-ASCII").zipWithIndex.foreach { case (b, i) => out(off + i) = b }
     def le32(off: Int, v: Int): Unit = (0 until 4).foreach(i =>
@@ -543,9 +533,6 @@ object Multimodal {
     le16(32, channels * 2) // block align
     le16(34, 16) // bits per sample
     ascii(36, "data"); le32(40, dataSize)
-    (0 until dataSize).foreach(i =>
-      out(44 + i) = if (seed.nonEmpty) seed(i % seed.length) else 0)
-    out
   }
 
   private val encodeWavUdf =
@@ -572,17 +559,7 @@ object Multimodal {
   def encodeWavFromPcm(rate: Int, channels: Int,
       pcm: Array[Byte]): Array[Byte] = {
     val out = new Array[Byte](44 + pcm.length)
-    def ascii(off: Int, s: String): Unit =
-      s.getBytes("US-ASCII").zipWithIndex.foreach { case (b, i) => out(off + i) = b }
-    def le32(off: Int, v: Int): Unit = (0 until 4).foreach(i =>
-      out(off + i) = ((v >> (8 * i)) & 0xff).toByte)
-    def le16(off: Int, v: Int): Unit = (0 until 2).foreach(i =>
-      out(off + i) = ((v >> (8 * i)) & 0xff).toByte)
-    ascii(0, "RIFF"); le32(4, 36 + pcm.length); ascii(8, "WAVE")
-    ascii(12, "fmt "); le32(16, 16); le16(20, 1)
-    le16(22, channels); le32(24, rate)
-    le32(28, rate * channels * 2); le16(32, channels * 2); le16(34, 16)
-    ascii(36, "data"); le32(40, pcm.length)
+    writeWavHeader(out, rate, channels)
     System.arraycopy(pcm, 0, out, 44, pcm.length)
     out
   }

@@ -37,9 +37,6 @@ object Similarity {
   def dotSqlDuck(a: String, b: String, dim: Int = 64): String =
     s"list_reduce(list_transform(range(1, ${dim + 1}), i -> $a[i] * $b[i]), (x, y) -> x + y)"
 
-  def cosineSqlDuck(a: String, b: String, dim: Int = 64): String =
-    s"(${dotSqlDuck(a, b, dim)} / (sqrt(${dotSqlDuck(a, a, dim)}) * sqrt(${dotSqlDuck(b, b, dim)})))"
-
   /** Exact top-k neighbors for each probe row. Probes must be small (they
     * are broadcast). Returns (qid, nid, cos, rank).
     */

@@ -246,8 +246,6 @@ object Chunker {
     parts.toSeq
   }
 
-  val chunkUdf = udf((sentences: Seq[String]) => chunkScalar(sentences))
-
   /** Stage: Doc df -> one row per chunk. Short texts (<= maxNoSplit) pass
     * through whole, mirroring `ner.py:181,204` (len check). Both the inner
     * split and the greedy re-pack are codegen'd native expressions

@@ -1,16 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-
-import graft.model.Doc
 
 /** Source adapters (S1-S4 of SURVEY.md §2).
   *
   * The engine's authoritative input shape is the `input_hint` Iceberg table
   * `(repo, path, commit, lang, content)`. The driver bench tables expose
-  * `documents.parquet(doc_id, text, lang, source, n_chars)`; [[docs]] maps
+  * `documents.parquet(doc_id, text, lang, source, n_chars)`; [[docsDf]] maps
   * them onto the Doc contract per FIXTURES.md §7:
   * `repo=source, path="docs/<doc_id>.txt", commit=sha256-derived, lang=lang,
   * content=text`.
@@ -81,9 +79,4 @@ object Tables {
         .as("commit"),
       col("lang"),
       col("text").as("content"))
-
-  def docs(spark: SparkSession, dir: String): Dataset[Doc] = {
-    import spark.implicits._
-    docsDf(spark, dir).as[Doc]
-  }
 }

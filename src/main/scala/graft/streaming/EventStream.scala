@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming twins. The reference is strictly request/response
   * (SURVEY.md §2 "Streaming": none required), but every engine stage is a
@@ -24,14 +24,6 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("ws"), col("event_type"), col("n"))
-
-  /** Stateless tagger stage applied to a streaming Doc relation — cleanup,
-    * sentence split, and mention tagging are all narrow, so they stream
-    * as-is; the downstream linking/canonicalization runs per micro-batch
-    * via [[forEachBatchTriples]].
-    */
-  def streamingMentions(docs: DataFrame): DataFrame =
-    graft.pipeline.KgPipeline.docMentions(docs)
 
   /** Run the full KG pipeline per micro-batch (`foreachBatch` is where
     * stateful stages — window pick, connected components — legally run in
@@ -174,10 +166,7 @@ object EventStream {
     * (bucket floor > previous buckets' max - delay), so the lateness
     * divergence documented on [[runningPerUserWithHorizon]] never triggers.
     *
-    * Driver boundedness: the replay collects the event relation to feed
-    * `MemoryStream` (feeding is inherently driver-side) — callers pass
-    * fixture-scale relations; production pipelines run the streaming
-    * function itself, not this replay harness.
+    * Driver boundedness: see [[replay]].
     *
     * Cross-engine exactness contract: callers pass an INTEGER-VALUED
     * `value` column (the gate quantizes with floor(value * 2^20) first) —
@@ -187,30 +176,28 @@ object EventStream {
     */
   def replayDailyHorizon(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Double)]()
-    replayDaily[(Long, Double, java.sql.Timestamp)](spark, events,
+    val emitted = replayDaily[(Long, Double, java.sql.Timestamp)](spark, events,
       Seq(col("user_id").cast("long"), col("value").cast("double"),
         col("ts").cast("timestamp")),
       Seq("user_id", "value", "ts"),
       r => (r.getLong(0), r.getDouble(1), r.getTimestamp(2)),
       OutputMode.Update(),
       (s, df) => runningPerUserWithHorizon(s, df,
-        horizon = gateHorizon, watermarkDelay = gateDelay).toDF(),
-      (bid, rows) => buf.synchronized {
-        rows.foreach(r => buf += ((bid, r.getLong(0), r.getLong(1), r.getDouble(2))))
-      })
-    val last = buf.synchronized {
-      buf.groupBy(_._2).map { case (_, rs) => rs.maxBy(_._1) }.toSeq
-    }
-    last.map(r => (r._2, r._3, r._4.toLong))
+        horizon = gateHorizon, watermarkDelay = gateDelay).toDF())
+    emitted
+      .flatMap { case (bid, rows) =>
+        rows.map(r => (bid, r.getLong(0), r.getLong(1), r.getDouble(2))) }
+      .groupBy(_._2).values.map(_.maxBy(_._1)).toSeq
+      .map(r => (r._2, r._3, r._4.toLong))
       .toDF("user_id", "n_events", "total_q")
   }
 
-  /** Shared scaffolding of the daily-replay gates: collect a bounded
-    * relation bucketed by epoch UTC day — floor(epoch_ms / 86400000), NOT
+  /** Day bucketing of the daily-replay gates: collect a bounded relation
+    * bucketed by epoch UTC day — floor(epoch_ms / 86400000), NOT
     * `date_trunc` (which would add a SECOND session-timezone dependence on
-    * top of the one below) — then replay one micro-batch per day in day
-    * order and hand each micro-batch's rows to `sink`.
+    * top of the one below) — then [[replay]] one micro-batch per day in
+    * day order (25,000 events per state partition) and return each
+    * micro-batch's (batchId, rows).
     *
     * Session-timezone contract: the gates' upstream
     * `col("ts").cast("timestamp")` converts the parquet TIMESTAMP_NTZ
@@ -220,56 +207,79 @@ object EventStream {
     * gate contract therefore requires a UTC caller session (Verify and
     * Bench both pin it); the floor-ms bucketing cannot remove that
     * dependence, only avoid doubling it.
-    *
-    * The replay runs on a CLONED session so the state-store partition
-    * count can be pinned without touching the caller's conf (the CC-loop
-    * pattern): every micro-batch commits one state delta file per
-    * partition, so the session default (32) is ~60 file commits per
-    * replayed day of PURE fixed overhead at fixture scale. The count is
-    * derived from the collected row count, capped at the caller's setting
-    * — never raised; results are partition-count-independent (hash
-    * grouping, global watermark, order-independent gate sums). The
-    * checkpoint lives on tmpfs when available: /tmp is a virtio disk
-    * whose fsync jitter dominates per-micro-batch latency (the reason the
-    * bench puts shuffle scratch on /dev/shm). Together 3.4×, BENCH.md §36.
     */
-  private def replayDaily[T: org.apache.spark.sql.Encoder](
+  private def replayDaily[T: Encoder](
       spark: SparkSession, source: DataFrame,
-      valueCols: Seq[org.apache.spark.sql.Column], colNames: Seq[String],
-      toTuple: org.apache.spark.sql.Row => T, mode: OutputMode,
-      query: (SparkSession, DataFrame) => DataFrame,
-      sink: (Long, Array[org.apache.spark.sql.Row]) => Unit): Unit = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val collected = source
+      valueCols: Seq[Column], colNames: Seq[String],
+      toTuple: Row => T, mode: OutputMode,
+      query: (SparkSession, DataFrame) => DataFrame): Seq[(Long, Array[Row])] = {
+    val buckets = source
       .select(valueCols :+
         floor(unix_millis(col("ts").cast("timestamp")) / lit(86400000.0))
           .cast("long").as("bucket"): _*)
       .orderBy("bucket", "ts")
       .collect()
-    val buckets = collected.groupBy(_.getLong(valueCols.length)).toSeq
+      .groupBy(_.getLong(valueCols.length)).toSeq
       .sortBy(_._1).map(_._2.toSeq.map(toTuple))
-    val replaySession = spark.newSession()
-    val parts = math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      math.max(1, (collected.length + 24999) / 25000))
-    replaySession.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    implicit val ctx = replaySession.sqlContext
-    val ms = MemoryStream[T]
-    val chk = tmpfsDir("daily-replay-chk")
-    val q = query(replaySession, ms.toDF().toDF(colNames: _*))
-      .writeStream.outputMode(mode)
-      .option("checkpointLocation", chk.toString)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        sink(bid, batch.collect()); ()
-      }
-      .start()
-    try buckets.foreach { b => ms.addData(b); q.processAllAvailable() }
-    finally { q.stop(); rmTree(chk) }
+    val emitted = scala.collection.mutable.ArrayBuffer[(Long, Array[Row])]()
+    replay(spark, buckets, colNames, rowsPerPartition = 25000) { (s, df, chk) =>
+      query(s, df).writeStream.outputMode(mode)
+        .option("checkpointLocation", chk)
+        .foreachBatch { (batch: DataFrame, bid: Long) =>
+          val rows = batch.collect()
+          emitted.synchronized { emitted += ((bid, rows)) }; ()
+        }
+        .start()
+    }
+    emitted.synchronized { emitted.toSeq }
   }
 
-  /** Temp dir on tmpfs when available: /tmp is a virtio disk whose fsync
-    * jitter dominates per-micro-batch latency (BENCH.md §36).
+  /** The one finite-replay harness behind the streaming gates: feeds
+    * `batches` through a `MemoryStream` (columns `colNames`), ONE `addData`
+    * plus `processAllAvailable` per batch, into the query `start` builds on
+    * (replay session, stream, checkpoint dir). A block is atomic, so the
+    * continuously-polling trigger cannot split a batch across two
+    * micro-batches — several `addData` calls per batch would race the poll
+    * loop and shift batchIds intermittently.
+    *
+    * The replay runs on a CLONED session so the shuffle (and state-store)
+    * partition count can be pinned without touching the caller's conf:
+    * every micro-batch commits one state delta file per partition and
+    * shuffles into every partition, so the session default (32) is
+    * ~60 file commits per replayed batch of PURE fixed overhead at fixture
+    * scale. The count is ceil(rows / `rowsPerPartition`), capped at the
+    * caller's setting — never raised; the gates' results are
+    * partition-count-independent. The checkpoint lives on tmpfs when
+    * available: /tmp is a virtio disk whose fsync jitter dominates
+    * per-micro-batch latency (the reason the bench puts shuffle scratch on
+    * /dev/shm). Together 3.4×, BENCH.md §36. The checkpoint is deleted on
+    * every path, `start` throwing included.
+    *
+    * Driver boundedness: feeding `MemoryStream` is inherently driver-side,
+    * so callers collect fixture-scale relations; production pipelines run
+    * the streaming functions themselves on a real source, not this harness.
     */
+  private[graft] def replay[T: Encoder](spark: SparkSession,
+      batches: Seq[Seq[T]], colNames: Seq[String], rowsPerPartition: Int)(
+      start: (SparkSession, DataFrame, String) => StreamingQuery): Unit = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val session = spark.newSession()
+    val rows = batches.map(_.size).sum
+    val parts = math.min(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      math.max(1, (rows + rowsPerPartition - 1) / rowsPerPartition))
+    session.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    implicit val ctx = session.sqlContext
+    val ms = MemoryStream[T]
+    val chk = tmpfsDir("replay-chk")
+    try {
+      val q = start(session, ms.toDF().toDF(colNames: _*), chk.toString)
+      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+      finally q.stop()
+    } finally rmTree(chk)
+  }
+
+  /** Temp dir on tmpfs when available (see [[replay]]). */
   private def tmpfsDir(prefix: String): java.nio.file.Path = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite)
@@ -310,12 +320,10 @@ object EventStream {
     * time at MICROSECOND precision (probed, dprobe6 — unlike the
     * flatMapGroupsWithState state's Timestamp.getTime floor), so a
     * micros-carrying feed would hold sub-ms expiries the twin's epoch_ms
-    * arithmetic cannot see. Driver boundedness: same fixture-scale
-    * replay contract as [[replayDailyHorizon]].
+    * arithmetic cannot see. Driver boundedness: see [[replay]].
     */
   def replayDailyDedup(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val buf = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
     replayDaily[(Long, String, java.sql.Timestamp)](spark, docs,
       Seq(col("user_id").cast("long"), col("text").cast("string"),
         col("ts").cast("timestamp")),
@@ -324,11 +332,9 @@ object EventStream {
       OutputMode.Append(),
       (_, df) => dedupDocsWithHorizon(df, tsCol = "ts",
         horizon = gateDedupHorizon, textCol = "text")
-        .select(col("user_id"), col("ts")),
-      (_, rows) => buf.synchronized {
-        rows.foreach(r => buf += ((r.getLong(0), r.getTimestamp(1).getTime)))
-      })
-    buf.synchronized { buf.toSeq }.toDF("user_id", "t_ms")
+        .select(col("user_id"), col("ts")))
+      .flatMap(_._2.map(r => (r.getLong(0), r.getTimestamp(1).getTime)))
+      .toDF("user_id", "t_ms")
   }
 
   /** Finite replay of a bounded Doc relation through
@@ -343,26 +349,14 @@ object EventStream {
     * are exactly the batch pipeline over its doc slice — the property the
     * DuckDB twin predicts slice by slice.
     *
-    * Same cloned-session/tmpfs shape as [[replayDaily]] (BENCH.md §36),
-    * with the shuffle-partition count derived from the collected doc
-    * count (~250 docs per partition — each batch's global distinct at
-    * fixture scale otherwise commits 32 near-empty shuffle partitions).
-    * It stays a separate harness rather than a [[replayDaily]] caller
-    * because the sink inverts: here the STREAM owns the output (the real
-    * foreachBatch parquet append under gate), while replayDaily hands
-    * each batch's rows to a driver-side collect sink — sharing the
-    * scaffold would mean parameterizing away exactly the writeStream
-    * plumbing this gate exists to exercise. The shared invariants
-    * (tmpfsDir, rmTree, cloned-session conf scope, one addData per
-    * bucket) are factored or mirrored deliberately.
-    * Driver boundedness: same fixture-scale replay contract as
-    * [[replayDailyHorizon]]; production streams run [[forEachBatchTriples]]
-    * itself on a real source.
+    * [[replay]] runs it with ~250 docs per shuffle partition (doc rows
+    * carry full document text where the daily replays' events carry
+    * scalars; each batch's global distinct at fixture scale otherwise
+    * commits 32 near-empty shuffle partitions).
     */
   def replayKgBatches(spark: SparkSession, docs: DataFrame,
       batchCol: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val rows = docs
       .select(col(batchCol).cast("long").as("b"), col("repo"), col("path"),
         col("commit"), col("lang"), col("content"))
@@ -382,41 +376,18 @@ object EventStream {
     val groups = keyed.map(_._2.toSeq
       .map(r => (r.getString(1), r.getString(2), r.getString(3),
         r.getString(4), r.getString(5))))
-    val replaySession = spark.newSession()
-    // ~250 docs per shuffle partition (vs replayDaily's 25k events/part:
-    // doc rows carry full document text, events four scalars)
-    val parts = math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      math.max(1, (rows.length + 249) / 250))
-    replaySession.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    implicit val ctx = replaySession.sqlContext
-    val ms = MemoryStream[(String, String, String, String, String)]
-    // per-resource try nesting: if creating `chk` throws, `out` must not
-    // leak on tmpfs (repeated gate failures would accumulate RAM-backed
-    // dirs the bench depends on)
     val out = tmpfsDir("kg-replay-out")
     try {
-      val chk = tmpfsDir("kg-replay-chk")
-      try {
-        val q = forEachBatchTriples(replaySession,
-            ms.toDF().toDF("repo", "path", "commit", "lang", "content"),
-            out.toString, chk.toString)
-          .start()
-        // ONE addData per group (the replayDaily pattern): a block is
-        // atomic, so the continuously-polling trigger cannot split a group
-        // across two micro-batches — multiple addData calls per group would
-        // race the poll loop and shift batchIds intermittently. (Map-side
-        // parallelism inside a batch is the one block's partition; this is
-        // a fixture-scale gate, the per-batch map work is sub-second.)
-        try groups.foreach { g => ms.addData(g); q.processAllAvailable() }
-        finally q.stop()
-        // materialize before the tmpfs output dir is deleted below
-        spark.read.parquet(out.toString)
-          .select(col("subj"), col("pred"), col("obj"), col("repo"),
-            col("lang"), col("batch_id").cast("long").as("batch_id"))
-          .as[(String, String, String, String, String, Long)].collect().toSeq
-          .toDF("subj", "pred", "obj", "repo", "lang", "batch_id")
-      } finally rmTree(chk)
+      replay(spark, groups, Seq("repo", "path", "commit", "lang", "content"),
+          rowsPerPartition = 250) { (s, df, chk) =>
+        forEachBatchTriples(s, df, out.toString, chk).start()
+      }
+      // materialize before the tmpfs output dir is deleted below
+      spark.read.parquet(out.toString)
+        .select(col("subj"), col("pred"), col("obj"), col("repo"),
+          col("lang"), col("batch_id").cast("long").as("batch_id"))
+        .as[(String, String, String, String, String, Long)].collect().toSeq
+        .toDF("subj", "pred", "obj", "repo", "lang", "batch_id")
     } finally rmTree(out)
   }
 

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Multimodal, TextAnalysis}
@@ -248,6 +250,13 @@ class AnalysisStreamingSpec extends AnyFunSuite {
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
     assert(img != null && img.getWidth == 17 && img.getHeight == 5)
     assert(bytes.length == 54 + ((17 * 3 + 3) / 4) * 4 * 5)
+    // payload bytes pinned: the mm_* gates predict them byte for byte
+    def sha(b: Array[Byte]): String = java.security.MessageDigest
+      .getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    assert(sha(bytes) ==
+      "5e3d56f2f4842bba375561e081350d75c7eeb2cba4f0dfd98165e9eb33c33d8b")
+    assert(sha(Multimodal.encodeWavScalar(8000, 2, 100, "seed".getBytes("UTF-8"))) ==
+      "b297827a50b3d5a08977c351acbc3b8be5f5e06f1fca42cd7bd1da377f372e82")
   }
 
   /** File streaming sources need a directory; stage the events parquet. */
@@ -506,6 +515,61 @@ class AnalysisStreamingSpec extends AnyFunSuite {
       assert(want.nonEmpty, s"batch $b must carry triples")
       assert(g == want, s"batch $b diverges from its batch-pipeline slice")
     }
+  }
+
+  test("streaming: replay harness — cloned session gets min(caller, ceil(rows / rowsPerPartition)) partitions, caller conf untouched") {
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "4")
+    val batches = Seq(Seq(1, 2, 3), Seq(4, 5))
+    def run(rowsPerPartition: Int): (String, Seq[(Long, Seq[Int])]) = {
+      var parts = ""
+      val fed = scala.collection.mutable.ArrayBuffer[(Long, Seq[Int])]()
+      EventStream.replay(caller, batches, Seq("v"), rowsPerPartition) { (s, df, chk) =>
+        assert(s ne caller)
+        parts = s.conf.get("spark.sql.shuffle.partitions")
+        df.writeStream.option("checkpointLocation", chk)
+          .foreachBatch { (b: DataFrame, id: Long) =>
+            val vs = b.as[Int].collect().toSeq.sorted
+            fed.synchronized { fed += ((id, vs)) }; ()
+          }
+          .start()
+      }
+      (parts, fed.synchronized { fed.toSeq })
+    }
+    val (below, fed) = run(rowsPerPartition = 2) // ceil(5 / 2) = 3 < 4
+    assert(below == "3")
+    assert(fed == Seq((0L, Seq(1, 2, 3)), (1L, Seq(4, 5))),
+      "one micro-batch per fed batch, in feed order")
+    assert(run(rowsPerPartition = 1)._1 == "4") // ceil(5 / 1) = 5, capped
+    assert(caller.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "8")
+  }
+
+  test("streaming: replay harness deletes its checkpoint after a normal run, a throwing start and a failing batch") {
+    def replayed(start: (DataFrame, String) => StreamingQuery): (String, Option[Throwable]) = {
+      var chk: String = null
+      val err = scala.util.Try(
+        EventStream.replay(spark, Seq(Seq(1), Seq(2)), Seq("v"), 1) { (_, df, c) =>
+          chk = c
+          assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(c)))
+          start(df, c)
+        }).failed.toOption
+      assert(chk != null, "start must be handed a checkpoint dir")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(chk)),
+        s"checkpoint $chk must be deleted")
+      (chk, err)
+    }
+    def sink(df: DataFrame, chk: String, failOn: Long): StreamingQuery =
+      df.writeStream.option("checkpointLocation", chk)
+        .foreachBatch { (_: DataFrame, id: Long) =>
+          if (id == failOn) throw new IllegalStateException(s"batch $id"); ()
+        }
+        .start()
+    assert(replayed((df, c) => sink(df, c, failOn = -1))._2.isEmpty)
+    assert(replayed((_, _) => throw new IllegalStateException("start"))._2
+      .exists(_.getMessage == "start"))
+    assert(replayed((df, c) => sink(df, c, failOn = 1))._2
+      .exists(_.isInstanceOf[StreamingQueryException]))
   }
 
   test("streaming: mapGroupsWithState running totals match batch counts") {
