@@ -337,7 +337,7 @@ object Similarity {
 
   /** Scores against every centroid as an array column (ordered folds). */
   private def centroidScores(v: Column, cents: Array[Array[Double]]): Column =
-    array(cents.map(c => dot(v, typedLit(c.toSeq))): _*)
+    array(cents.map(c => dot(v, typedLit(c.toSeq))).toSeq: _*)
 
   /** IVF (inverted-file) ANN: corpus vectors are assigned map-side to their
     * nearest centroid cell (the shuffle key at scale — each cell is a

@@ -30,18 +30,6 @@ import graft.JsonUtil
   */
 object Manifest {
 
-  /** Hadoop options of a stage commit, data and manifest alike: a `file:`
-    * warehouse is written through [[NioLocalFileSystem]], which sets the
-    * stock permission bits without forking `chmod`. Uncached, since the
-    * FileSystem cache keys on scheme and user, not on the conf. Spark copies
-    * writer options into the write's Hadoop conf, which reaches the job
-    * committer and every task, so the session's filesystems stay stock;
-    * other schemes ignore the `file` key.
-    */
-  private val commitFsOptions = Map(
-    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
-    "fs.file.impl.disable.cache" -> "true")
-
   def manifestPath(warehouse: String, stage: String): String =
     s"$warehouse/$stage/_manifest.json"
 
@@ -59,6 +47,12 @@ object Manifest {
     * manifest: stage name, total rows, the caller-supplied input
     * fingerprint, per-partition row counts (lineage metrics), and the
     * schema of `df`. Returns the committed relation, read with that schema.
+    *
+    * Data and manifest alike are written with [[NioLocalFileSystem.options]],
+    * so a `file:` warehouse sets the stock permission bits without forking
+    * `chmod`. Spark copies writer options into the write's Hadoop conf,
+    * which reaches the job committer and every task, so the session's
+    * filesystems stay stock.
     */
   def writeStage(spark: SparkSession, df: DataFrame, warehouse: String,
       stage: String, partitionCols: Seq[String],
@@ -74,7 +68,7 @@ object Manifest {
     val toWrite =
       if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*)
       else df
-    val writer = toWrite.write.options(commitFsOptions).mode("overwrite")
+    val writer = toWrite.write.options(NioLocalFileSystem.options).mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(out)
     // Lineage metrics from the COMMITTED snapshot, not from a cache of the
@@ -113,7 +107,7 @@ object Manifest {
     val p = new org.apache.hadoop.fs.Path(manifestPath(warehouse, stage))
     val conf = new org.apache.hadoop.conf.Configuration(
       spark.sparkContext.hadoopConfiguration)
-    commitFsOptions.foreach { case (k, v) => conf.set(k, v) }
+    NioLocalFileSystem.options.foreach { case (k, v) => conf.set(k, v) }
     // Not closed: the uncached local instance holds no resources, and any
     // other scheme returns the session's cached instance, which stays open.
     val o = p.getFileSystem(conf).create(p, true)

@@ -6,16 +6,30 @@ import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** The `file:` filesystem of stage commits: Hadoop's checksummed
-  * [[LocalFileSystem]] (same `.crc` files, rename and commit semantics)
-  * over a raw filesystem that sets permissions with java.nio. Without
-  * libhadoop, the stock `RawLocalFileSystem.setPermission` forks
+/** The `file:` filesystem of stage commits and streaming replays: Hadoop's
+  * checksummed [[LocalFileSystem]] (same `.crc` files, rename and commit
+  * semantics) over a raw filesystem that sets permissions with java.nio.
+  * Without libhadoop, the stock `RawLocalFileSystem.setPermission` forks
   * `/bin/chmod` for every part file, `.crc` file and directory a commit
   * creates — 1,337 forks in one cold `Main.run --canon` over 5,000 docs,
   * run one after another by each stage's single coalesced write task
-  * (BENCH §50).
+  * (BENCH §50), and 118 per `stream` benchmark iteration from the replays'
+  * checkpoints, state stores and sink (BENCH §53).
   */
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+object NioLocalFileSystem {
+
+  /** Hadoop conf keys that make `file:` paths use [[NioLocalFileSystem]].
+    * Uncached, since the FileSystem cache keys on scheme and user, not on
+    * the conf; other schemes ignore the `file` key. The one copy behind
+    * stage commits (per-write options, see [[Manifest]]) and the streaming
+    * replay session (see [[graft.streaming.EventStream.replay]]).
+    */
+  val options: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+}
 
 class NioRawLocalFileSystem extends RawLocalFileSystem {
 

@@ -69,7 +69,7 @@ object XmlCorpus {
     * below is the declarative parity twin (spec-pinned in TextSplitSpec).
     */
   def articles(df: DataFrame, xmlCol: String = "xml"): DataFrame = {
-    val keep = df.columns.filter(_ != xmlCol).map(col)
+    val keep = df.columns.toSeq.filter(_ != xmlCol).map(col)
     df.select(keep :+ explode(
         graft.expressions.XmlArticle.xml_article(col(xmlCol))).as("x__"): _*)
       .withColumn("content",

@@ -98,29 +98,6 @@ object EventStream {
       }
   }
 
-  /** [[runningPerUser]] with a bounded state horizon — the
-    * mapGroupsWithState twin of [[dedupDocsWithHorizon]] (the r4 dedup
-    * horizon; same 3M-entry retention reasoning as the reference's weekly
-    * cache clean, `ner-clean-cache.sh:9`). A key idle past `horizon` in
-    * EVENT time has its state evicted via `EventTimeTimeout`: the timeout
-    * timestamp is re-armed to (the key's max event time ever seen +
-    * horizon) on every batch that carries the key — the max is kept in
-    * state so a batch carrying only a within-delay LATE event cannot pull
-    * the deadline backwards — and once the stream's watermark passes it,
-    * the timed-out invocation removes the state and emits nothing
-    * (flatMapGroupsWithState — a timeout is an eviction, not an output
-    * row). A key re-arriving after eviction restarts its totals from zero,
-    * exactly as an expired cache entry is recomputed. State size is bounded
-    * by (active keys within the horizon), not the stream's lifetime.
-    *
-    * Lateness divergence from [[runningPerUser]]: EventTimeTimeout requires
-    * a watermark, and flatMapGroupsWithState DROPS input rows older than it
-    * before they reach the function — so an out-of-order event arriving
-    * more than `watermarkDelay` of event time behind the stream's maximum
-    * is silently excluded from the totals, where [[runningPerUser]] (no
-    * watermark) counts everything. Size `watermarkDelay` to the source's
-    * real disorder; within-delay late events are counted (spec-pinned).
-    */
   /** Constants of the `stream_horizon` driver gate — single source of truth
     * for [[replayDailyHorizon]]'s Spark run AND the DuckDB twin arithmetic
     * in SparkEntry (change one, both sides move).
@@ -213,14 +190,17 @@ object EventStream {
       valueCols: Seq[Column], colNames: Seq[String],
       toTuple: Row => T, mode: OutputMode,
       query: (SparkSession, DataFrame) => DataFrame): Seq[(Long, Array[Row])] = {
-    val buckets = source
+    val bucketed = source
       .select(valueCols :+
         floor(unix_millis(col("ts").cast("timestamp")) / lit(86400000.0))
           .cast("long").as("bucket"): _*)
-      .orderBy("bucket", "ts")
-      .collect()
+    val ts = bucketed.schema.fieldIndex("ts")
+    // sorted on the driver, where the rows land anyway: a global orderBy
+    // would add a range-sampling job and a sort shuffle for the same order
+    val buckets = bucketed.collect()
       .groupBy(_.getLong(valueCols.length)).toSeq
-      .sortBy(_._1).map(_._2.toSeq.map(toTuple))
+      .sortBy(_._1).map(_._2.toSeq
+        .sortWith(_.getTimestamp(ts) before _.getTimestamp(ts)).map(toTuple))
     val emitted = scala.collection.mutable.ArrayBuffer[(Long, Array[Row])]()
     replay(spark, buckets, colNames, rowsPerPartition = 25000) { (s, df, chk) =>
       query(s, df).writeStream.outputMode(mode)
@@ -255,6 +235,18 @@ object EventStream {
     * /dev/shm). Together 3.4×, BENCH.md §36. The checkpoint is deleted on
     * every path, `start` throwing included.
     *
+    * The replay session also writes its `file:` paths (offset and commit
+    * logs, state-store deltas, a `foreachBatch` sink's appends) through
+    * [[graft.pipeline.NioLocalFileSystem]], and its checkpoint through the
+    * `FileSystem`-based checkpoint manager, since the default `FileContext`
+    * one never sees `fs.file.impl`. `newHadoopConf` copies the session's
+    * keys into every Hadoop conf the query, the state store and the sink
+    * build. The stock path forks `/bin/chmod` per file and directory
+    * without libhadoop: 118 forks per `stream` benchmark iteration, 0 now
+    * (BENCH §53). The manager's rename is check-then-rename, safe for the
+    * replay's single writer; `.crc` files and permission bits are the
+    * stock ones.
+    *
     * Driver boundedness: feeding `MemoryStream` is inherently driver-side,
     * so callers collect fixture-scale relations; production pipelines run
     * the streaming functions themselves on a real source, not this harness.
@@ -269,6 +261,7 @@ object EventStream {
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
       math.max(1, (rows + rowsPerPartition - 1) / rowsPerPartition))
     session.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    replayFsConf.foreach { case (k, v) => session.conf.set(k, v) }
     implicit val ctx = session.sqlContext
     val ms = MemoryStream[T]
     val chk = tmpfsDir("replay-chk")
@@ -278,6 +271,13 @@ object EventStream {
       finally q.stop()
     } finally rmTree(chk)
   }
+
+  /** The conf keys [[replay]] sets on its cloned session only. */
+  private[graft] val replayFsConf: Map[String, String] =
+    graft.pipeline.NioLocalFileSystem.options +
+      ("spark.sql.streaming.checkpointFileManagerClass" ->
+        ("org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager"))
 
   /** Temp dir on tmpfs when available (see [[replay]]). */
   private def tmpfsDir(prefix: String): java.nio.file.Path = {
@@ -337,6 +337,10 @@ object EventStream {
       .toDF("user_id", "t_ms")
   }
 
+  /** What [[forEachBatchTriples]] appends: the triples plus `batch_id`. */
+  private val kgReplaySchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "subj STRING, pred STRING, obj STRING, repo STRING, lang STRING, batch_id BIGINT")
+
   /** Finite replay of a bounded Doc relation through
     * [[forEachBatchTriples]] — the `stream_kg` driver gate: the corpus
     * arrives over micro-batches keyed by `batchCol` (groups fed in
@@ -382,15 +386,37 @@ object EventStream {
           rowsPerPartition = 250) { (s, df, chk) =>
         forEachBatchTriples(s, df, out.toString, chk).start()
       }
-      // materialize before the tmpfs output dir is deleted below
-      spark.read.parquet(out.toString)
-        .select(col("subj"), col("pred"), col("obj"), col("repo"),
-          col("lang"), col("batch_id").cast("long").as("batch_id"))
+      // materialize before the tmpfs output dir is deleted below; the
+      // declared schema spares a footer-reading inference job
+      spark.read.schema(kgReplaySchema).parquet(out.toString)
         .as[(String, String, String, String, String, Long)].collect().toSeq
         .toDF("subj", "pred", "obj", "repo", "lang", "batch_id")
     } finally rmTree(out)
   }
 
+  /** [[runningPerUser]] with a bounded state horizon — the
+    * mapGroupsWithState twin of [[dedupDocsWithHorizon]] (the r4 dedup
+    * horizon; same 3M-entry retention reasoning as the reference's weekly
+    * cache clean, `ner-clean-cache.sh:9`). A key idle past `horizon` in
+    * EVENT time has its state evicted via `EventTimeTimeout`: the timeout
+    * timestamp is re-armed to (the key's max event time ever seen +
+    * horizon) on every batch that carries the key — the max is kept in
+    * state so a batch carrying only a within-delay LATE event cannot pull
+    * the deadline backwards — and once the stream's watermark passes it,
+    * the timed-out invocation removes the state and emits nothing
+    * (flatMapGroupsWithState — a timeout is an eviction, not an output
+    * row). A key re-arriving after eviction restarts its totals from zero,
+    * exactly as an expired cache entry is recomputed. State size is bounded
+    * by (active keys within the horizon), not the stream's lifetime.
+    *
+    * Lateness divergence from [[runningPerUser]]: EventTimeTimeout requires
+    * a watermark, and flatMapGroupsWithState DROPS input rows older than it
+    * before they reach the function — so an out-of-order event arriving
+    * more than `watermarkDelay` of event time behind the stream's maximum
+    * is silently excluded from the totals, where [[runningPerUser]] (no
+    * watermark) counts everything. Size `watermarkDelay` to the source's
+    * real disorder; within-delay late events are counted (spec-pinned).
+    */
   def runningPerUserWithHorizon(spark: SparkSession, events: DataFrame,
       horizon: String = "1 hour",
       watermarkDelay: String = "10 minutes"): Dataset[UserRunning] = {

@@ -502,9 +502,12 @@ class AnalysisStreamingSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.sources.Tables.docsDfWithId(spark, dir)
       .withColumn("b", col("doc_id") % 3) // `%` like the shipped gate, NOT pmod
-    val got = EventStream.replayKgBatches(spark, docs, "b")
-      .select("batch_id", "subj", "pred", "obj", "repo", "lang")
-      .as[(Long, String, String, String, String, String)].collect()
+    val (got, sites) = Fixtures.jobsDuring(spark)(
+      EventStream.replayKgBatches(spark, docs, "b")
+        .select("batch_id", "subj", "pred", "obj", "repo", "lang")
+        .as[(Long, String, String, String, String, String)].collect())
+    // the read-back declares the sink's schema: no footer-inference job
+    assert(!sites.exists(_.startsWith("parquet at EventStream")), sites)
     assert(got.map(_._1).distinct.sorted.toSeq == Seq(0L, 1L, 2L))
     (0 until 3).foreach { b =>
       val slice = docs.filter(col("b") === b).drop("b", "doc_id")
@@ -570,6 +573,78 @@ class AnalysisStreamingSpec extends AnyFunSuite {
       .exists(_.getMessage == "start"))
     assert(replayed((df, c) => sink(df, c, failOn = 1))._2
       .exists(_.isInstanceOf[StreamingQueryException]))
+  }
+
+  test("streaming: replay session writes checkpoint, state and sink without forking") {
+    import java.nio.file.{Files, Path => JPath}
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import scala.jdk.CollectionConverters._
+    import graft.pipeline.NioLocalFileSystem
+    val batches = Seq(Seq(1, 2, 3), Seq(4, 5))
+    val root = Files.createTempDirectory("replay-parity")
+    // the same stateful query and parquet sink on either session; each
+    // checkpoints into a dir this spec owns (the harness deletes its own)
+    def query(s: SparkSession, df: DataFrame, name: String,
+        nio: Boolean): StreamingQuery = {
+      val sink = root.resolve(s"$name-sink").toString
+      df.groupBy((col("v") % 2).as("k")).count()
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", root.resolve(s"$name-chk").toString)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          assert(new Path(sink).getFileSystem(b.sparkSession.sessionState
+            .newHadoopConf()).isInstanceOf[NioLocalFileSystem] == nio)
+          b.write.mode("append").parquet(sink); ()
+        }
+        .start()
+    }
+    // relative name (temp UUIDs masked) -> permission bits, per tree
+    def tree(name: String): Seq[(String, String)] = {
+      val base = root.resolve(name)
+      val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+      val w = Files.walk(base)
+      try w.iterator().asScala.filter(_ != base).map { (p: JPath) =>
+        uuid.replaceAllIn(base.relativize(p).toString, "<uuid>") ->
+          java.nio.file.attribute.PosixFilePermissions.toString(
+            Files.getPosixFilePermissions(p))
+      }.toSeq.sorted
+      finally w.close()
+    }
+    try {
+      EventStream.replay(spark, batches, Seq("v"), rowsPerPartition = 3) { (s, df, chk) =>
+        val conf = s.sessionState.newHadoopConf()
+        assert(CheckpointFileManager.create(new Path(chk), conf)
+          .isInstanceOf[FileSystemBasedCheckpointFileManager])
+        assert(new Path(chk).getFileSystem(conf).isInstanceOf[NioLocalFileSystem])
+        query(s, df, "replay", nio = true)
+      }
+      EventStream.replayFsConf.keys.foreach { k =>
+        assert(spark.conf.getOption(k).isEmpty, s"caller session must not carry $k")
+      }
+      assert(!spark.sessionState.newHadoopConf().get("fs.file.impl", "")
+        .contains("NioLocalFileSystem"))
+      // the stock twin: a plain clone at the same partition count
+      // (ceil(5 / 3) = 2), the default FileContext checkpoint manager
+      val plain = spark.newSession()
+      plain.conf.set("spark.sql.shuffle.partitions", "2")
+      val ms = { implicit val ctx = plain.sqlContext; MemoryStream[Int] }
+      val q = query(plain, ms.toDF().toDF("v"), "plain", nio = false)
+      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      Seq("chk", "sink").foreach { t =>
+        val (r, p) = (tree(s"replay-$t"), tree(s"plain-$t"))
+        assert(r.exists(_._1.endsWith(".crc")), s"$t tree must hold .crc files")
+        assert(r == p, s"$t trees differ:\nreplay $r\nplain  $p")
+      }
+      assert(tree("replay-chk").exists(_._1.startsWith("state/")))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
+      }
+      rm(root.toFile)
+    }
   }
 
   test("streaming: mapGroupsWithState running totals match batch counts") {
