@@ -20,11 +20,25 @@ import graft.sources.Tables
   *   spark-submit --class graft.Main <jar> <sfDir> <warehouseDir> [--canon]
   */
 object Main {
+  val usage = "usage: graft.Main <sfDir> <warehouseDir> [--canon]"
+
+  /** `<sfDir> <warehouseDir> [--canon]` as (sfDir, warehouseDir, canon).
+    * Anything else fails with [[usage]]: a missing or extra argument, a
+    * misspelt flag (`--Canon`, `-canon`) or a flag in a path's place. A
+    * flag that is silently dropped builds a non-canon KG, which a later
+    * `--canon` run resumes under the same fingerprint.
+    */
+  def parseArgs(args: Seq[String]): (String, String, Boolean) = {
+    def path(a: String) = !a.startsWith("-")
+    args match {
+      case Seq(sf, wh) if path(sf) && path(wh) => (sf, wh, false)
+      case Seq(sf, wh, "--canon") if path(sf) && path(wh) => (sf, wh, true)
+      case _ => throw new IllegalArgumentException(usage)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: graft.Main <sfDir> <warehouseDir> [--canon]")
-    val Array(sfDir, warehouse) = args.take(2)
-    val canon = args.contains("--canon")
+    val (sfDir, warehouse, canon) = parseArgs(args.toSeq)
 
     val spark = SparkSession.builder()
       .config(sessionConf(new SparkConf(), sys.env))
@@ -68,9 +82,9 @@ object Main {
   def corpusFingerprint(docs: DataFrame): String = {
     val zero = Array.fill(6)(BigInteger.ZERO)
     val Array(n, hashed, sums @ _*) =
-      docs.select(sha2(col("content"), 256)).queryExecution.toRdd
+      (docs.select(sha2(col("content"), 256)).queryExecution.toRdd
         .mapPartitions(rows => Iterator(sliceSums(rows)))
-        .fold(zero)((a, b) => a.zip(b).map { case (x, y) => x.add(y) })
+        .fold(zero)((a, b) => a.zip(b).map { case (x, y) => x.add(y) }): @unchecked)
     Text.sha256HexScalar((if (hashed.signum == 0) Seq(n) else n +: sums).mkString("|"))
   }
 

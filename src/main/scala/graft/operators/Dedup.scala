@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Text
-
 /** Training-data deduplication suite over the `documents` corpus — exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard, each with an exact DuckDB
   * oracle twin.
@@ -69,8 +67,7 @@ object Dedup {
   /** df + native-kernel MinHash minima column `mh` (and optionally the
     * distinct shingle set). The token array is bound in its own projection
     * so the two kernels share ONE split. This is the canonical entry for
-    * every MinHash-family query; [[withShingleDigests]] below is its
-    * declarative parity twin.
+    * every MinHash-family query.
     */
   def withMinHashes(df: DataFrame, textCol: String,
       shingleSetCol: Option[String] = None): DataFrame = {
@@ -101,25 +98,6 @@ object Dedup {
     }: _*)
   }
 
-  /** PARITY TWIN of [[withMinHashes]] (declarative HOF chain): df +
-    * shingle-digest column `dg` (and optionally the distinct shingle set)
-    * with the token array MATERIALIZED in its own projection — it is
-    * referenced multiple times, so CollapseProject keeps it as a bound
-    * attribute instead of inlining the split into the shingle lambdas
-    * (the 6× trap above). Kept as the spec-pinned reference formulation;
-    * production queries use the kernel entry.
-    */
-  def withShingleDigests(df: DataFrame, textCol: String,
-      shingleSetCol: Option[String] = None): DataFrame = {
-    val base = df.withColumn("toks__", tokens(col(textCol)))
-      .withColumn("sh__", shingles(col("toks__")))
-    val withSet = shingleSetCol
-      .map(c => base.withColumn(c, array_distinct(col("sh__"))))
-      .getOrElse(base)
-    withSet.withColumn("dg", shingleDigests(col("sh__")))
-      .drop("toks__", "sh__")
-  }
-
   /** k-word shingle array (k = [[shingleSize]]) from a token array. Docs
     * with fewer than k tokens yield the empty array — the `when` guard is
     * load-bearing: `sequence(1, 0)` steps DOWNWARD in Spark ([1, 0]) and
@@ -138,15 +116,13 @@ object Dedup {
     s"list_transform(range(1, greatest(len($toks) - ${shingleSize - 1}, 0) + 1), " +
       s"i -> $toks[i] || ' ' || $toks[i+1] || ' ' || $toks[i+2])"
 
-  /** The h-th MinHash of a shingle array: string-min over the h-th 8-hex
-    * slice of ONE sha256 per shingle (the standard split-one-digest trick:
-    * 8 independent 32-bit hash functions for the price of a single sha256,
-    * 8× fewer hash ops than hashing per-h — this dominates MinHash cost at
-    * corpus scale).
+  /** The h-th MinHash of a shingle list (DuckDB): string-min over the h-th
+    * 8-hex slice of the shingle's sha256 (the standard split-one-digest
+    * trick: 8 independent 32-bit hash functions from a single sha256 —
+    * on the Spark side the kernel and [[shingleDigests]] hash each shingle
+    * once, 8× fewer hash ops than hashing per-h, which dominates MinHash
+    * cost at corpus scale).
     */
-  def minhash(sh: Column, h: Int): Column =
-    array_min(transform(sh, s => substring(sha2(s, 256), h * 8 + 1, 8)))
-
   def minhashSqlDuck(sh: String, h: Int): String =
     s"list_min(list_transform($sh, s -> substr(sha256(s), ${h * 8 + 1}, 8)))"
 
@@ -172,26 +148,15 @@ object Dedup {
     }: _*)
   }
 
-  /** Full signature as one pipe-joined string column (stable compare). */
-  def signature(sh: Column): Column =
-    concat_ws("|", (0 until numHashes).map(minhash(sh, _)): _*)
-
+  /** Full signature as one pipe-joined string (stable compare). */
   def signatureSqlDuck(sh: String): String =
     "concat_ws('|', " + (0 until numHashes).map(minhashSqlDuck(sh, _)).mkString(", ") + ")"
 
-  /** LSH band keys: band b hashes minhashes [b*r, b*r+r). Emitted as an
-    * array of "b:sha256(m_i||m_j)" strings; explode + self-join on the band
-    * key yields the candidate pairs. Bucket-join beats all-pairs at scale:
-    * the shuffle key is the band digest, so only near-duplicates collide.
+  /** LSH band keys: band b hashes minhashes [b*r, b*r+r). Emitted as
+    * "b:sha256(m_i||m_j)" strings; explode + self-join on the band key
+    * yields the candidate pairs. Bucket-join beats all-pairs at scale: the
+    * shuffle key is the band digest, so only near-duplicates collide.
     */
-  def bandKeys(sh: Column): Column = {
-    val r = numHashes / numBands
-    array((0 until numBands).map { b =>
-      val parts = (0 until r).map(j => minhash(sh, b * r + j))
-      concat(lit(s"$b:"), sha2(concat_ws("|", parts: _*), 256))
-    }: _*)
-  }
-
   def bandKeysSqlDuck(sh: String): Seq[String] = {
     val r = numHashes / numBands
     (0 until numBands).map { b =>

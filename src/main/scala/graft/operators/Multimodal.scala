@@ -342,22 +342,8 @@ object Multimodal {
   final case class VideoMeta(doc_id: Long, n_frames: Int, width: Int,
       height: Int, sampled_frames: Int)
 
-  def videoFramesCol(text: Column): Column = (hexPair(text, 11) % 5) + 2
-
   def videoFramesSqlDuck(col: String): String =
     s"(${hexPairSqlDuck(col, 11)} % 5 + 2)"
-
-  /** Multi-frame GIF synthesized deterministically: `frames` frames of
-    * w×h, pixel (x, y) of frame f filled from the seed cyclically.
-    * Acquires and disposes its own writer — single-payload convenience;
-    * the batch path ([[withGifPayload]]) reuses one writer per partition.
-    */
-  def encodeGifScalar(w: Int, h: Int, frames: Int,
-      seed: Array[Byte]): Array[Byte] = {
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    try encodeGifWith(writer, w, h, frames, seed)
-    finally writer.dispose()
-  }
 
   /** 256-level grayscale palette shared by every synthesized GIF frame:
     * handing the writer an INDEXED raster skips its per-frame RGB→palette
@@ -371,7 +357,8 @@ object Multimodal {
     new java.awt.image.IndexColorModel(8, 256, gray, gray, gray)
   }
 
-  /** Encode with a CALLER-OWNED (reusable) writer — `reset()` between
+  /** Multi-frame GIF synthesized deterministically (`frames` frames of
+    * w×h), encoded with a CALLER-OWNED (reusable) writer — `reset()` between
     * payloads restores the writer to its initial state, so one instance
     * serves a whole partition. Frame f's pixel (x, y) is palette index
     * seed[(f·w·h + y·w + x) mod len] — deterministic content, filled
@@ -411,8 +398,8 @@ object Multimodal {
     * `getImageWritersByFormatName` + `dispose` UDF was the single biggest
     * cost in `mm_video`; this is the same per-partition-init shape every
     * decoder in this file uses. Dim/frame derivations mirror [[widthCol]]/
-    * [[heightCol]]/[[videoFramesCol]] exactly (hex pairs of sha256(text)),
-    * so the SQL oracle's predictions are unchanged.
+    * [[heightCol]]/[[videoFramesSqlDuck]] exactly (hex pairs of
+    * sha256(text)), so the SQL oracle's predictions are unchanged.
     */
   def withGifPayload(df: DataFrame, textCol: String = "text"): DataFrame = {
     val spark = df.sparkSession

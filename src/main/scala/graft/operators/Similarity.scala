@@ -249,7 +249,7 @@ object Similarity {
     */
   def trainCentroids(corpus: DataFrame, nlist: Int = 16, iters: Int = 5,
       seed: Long = 7L, d: Int = dim): Array[Array[Double]] = {
-    var cents = centroids(nlist, seed, d)
+    val cents = centroids(nlist, seed, d)
     val emb = corpus.select(col("embedding").cast("array<double>").as("e"))
     (1 to iters).foreach { _ =>
       val cell = assignCell(col("e"), cents)

@@ -75,28 +75,26 @@ object TagCache {
     withKey.join(results, Seq(keyCol), "left")
   }
 
-  /** Bucketed persistence for the cache table — the CO-LOCATED-JOIN scale
-    * path: `bucketBy(buckets, k)` + in-bucket sort means every J1 join-back
-    * against the cache reads the cache side pre-partitioned and pre-sorted
-    * on the key; only the (smaller, per-batch) probe side shuffles. At the
-    * reference's 3M-entry retention — or a multi-billion-row production
-    * cache — this removes the larger of J1's two shuffles from every run.
-    * (Parquet bucketed tables need the session catalog; plain-path parquet
-    * cannot carry bucket metadata.)
-    */
-  def writeBucketedCache(df: DataFrame, table: String,
-      buckets: Int = 16): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, keyCol).sortBy(keyCol)
-      .saveAsTable(table)
+  /** Buckets of [[writeBucketedCache]]'s layout. */
+  private val buckets = 8
 
-  /** Join `withKey` (carrying [[keyCol]]) against a bucketed cache table:
-    * the cache side contributes NO exchange (asserted by spec).
+  /** Bucketed persistence for the cache table — the CO-LOCATED-JOIN scale
+    * path: `bucketBy(buckets, k)` means a join against the cache on the
+    * key reads the cache side pre-partitioned, so only the (smaller,
+    * per-batch) probe side shuffles. At the reference's 3M-entry
+    * retention — or a multi-billion-row production cache — this removes
+    * the larger of J1's two shuffles from every run. No in-bucket sort:
+    * Spark does not carry it into the read's output ordering, so a
+    * sort-merge join sorts the scanned side anyway. Parquet bucketed
+    * tables need the session catalog; `path` places the table's files.
+    * The planner still broadcasts a cache under the broadcast threshold,
+    * and then scans it without its buckets.
     */
-  def joinBucketedCache(spark: SparkSession, withKey: DataFrame,
-      table: String): DataFrame =
-    withKey.join(spark.table(table).select(keyCol, "entities"),
-      Seq(keyCol), "left")
+  def writeBucketedCache(df: DataFrame, table: String, path: String): Unit =
+    df.write.mode("overwrite").format("parquet")
+      .bucketBy(buckets, keyCol)
+      .option("path", path)
+      .saveAsTable(table)
 
   /** S2 — import the reference's on-disk cache format: one ndjson line per
     * entry, `{"<sentence>": {"<LABEL>": ["<text>", ...], ...}}`
@@ -165,16 +163,5 @@ object TagCache {
     val w = Window.orderBy(col("ingest_ts").desc, col(keyCol))
     cache.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= keep).drop("rn")
-  }
-
-  /** Partitioned retention — the scale path: keep `keepPerBucket` per key
-    * bucket; no single-reducer global sort.
-    */
-  def retentionPartitioned(cache: DataFrame, keepPerBucket: Long,
-      buckets: Int = 256): DataFrame = {
-    val w = Window.partitionBy(substring(col(keyCol), 1, 2))
-      .orderBy(col("ingest_ts").desc, col(keyCol))
-    cache.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= keepPerBucket).drop("rn")
   }
 }

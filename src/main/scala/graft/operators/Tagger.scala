@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Text
 import graft.model.{AliasEntry, Entity}
 
 /** G4 — the deterministic tagger stage that replaces the reference's flair

@@ -101,24 +101,21 @@ object KgPipeline {
       .select(col("id").as("entity_id"), col("component").as("canon_id"))
   }
 
-  /** STAR edges, not clique edges: each entity connects to its document's
-    * minimum entity (the hub). Connectivity — hence every connected
-    * component — is identical to the all-pairs formulation: two entities
-    * co-occurring in a doc reach each other through the doc's hub, and
-    * cross-doc paths compose hop-by-hop exactly as with cliques. But a doc
-    * linking K entities emits K-1 edge rows instead of K(K-1)/2: the
+  /** (hub, member) pairs per doc-set row — STAR edges, not clique edges:
+    * each entity connects to its document's minimum entity (the hub).
+    * Connectivity — hence every connected component — is identical to the
+    * all-pairs formulation: two entities co-occurring in a doc reach each
+    * other through the doc's hub, and cross-doc paths compose hop-by-hop
+    * exactly as with cliques. But a doc linking K entities emits K-1 edge
+    * rows (plus the hub's self-pair) instead of K(K-1)/2: the
     * all-pairs self-join this replaces was the last join-explosion shape in
     * the flagship pipeline — one hot document linking 10^4 entities (a
     * README naming every product) would have pushed 5·10^7 rows through a
     * single join key. Input: per-doc entity-set rows (`es: array<string>`);
     * the hub is `array_min` of the set — no window, no extra exchange. The
-    * final distinct collapses identical star edges produced by different
-    * documents (tiny: K-1 rows per doc in, unique pairs out).
+    * final distinct collapses identical star pairs produced by different
+    * documents (tiny: K rows per doc in, unique pairs out).
     */
-  private[graft] def starEdges(sets: DataFrame): DataFrame =
-    starPairs(sets).filter(col("dst") =!= col("src"))
-
-  /** (hub, member) pairs per doc-set row, self-pair included, distinct. */
   private[graft] def starPairs(sets: DataFrame): DataFrame =
     sets
       .select(array_min(col("es")).as("src"), explode(col("es")).as("dst"))

@@ -235,7 +235,9 @@ class AnalysisStreamingSpec extends AnyFunSuite {
       assert(m.width >= 1 && m.width <= 32 && m.height >= 1 && m.height <= 32)
     }
     // direct encoder round trip with known params
-    val bytes = Multimodal.encodeGifScalar(5, 3, 4, "seed".getBytes("UTF-8"))
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
+    val bytes = try Multimodal.encodeGifWith(writer, 5, 3, 4, "seed".getBytes("UTF-8"))
+      finally writer.dispose()
     val iis = javax.imageio.ImageIO.createImageInputStream(
       new java.io.ByteArrayInputStream(bytes))
     val r = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()

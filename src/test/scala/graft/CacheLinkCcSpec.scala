@@ -255,18 +255,20 @@ class CacheLinkCcSpec extends AnyFunSuite {
 
   test("J3: hot doc linking 10^4 entities emits LINEAR star edges, same components") {
     // a clique build would emit K(K-1)/2 ≈ 5·10^7 rows here; the star build
-    // must emit exactly K-1 per doc. Components must match the clique
-    // semantics: d-hot's 10^4 entities are one cluster, bridged to d2's via
-    // the shared E00000.
+    // must emit exactly K-1 edges per doc, plus the hub's self-pair.
+    // Components must match the clique semantics: d-hot's 10^4 entities are
+    // one cluster, bridged to d2's via the shared E00000.
     val k = 10000
     val hot = (0 until k).map(i => ("d-hot", f"E$i%05d"))
     val other = Seq(("d2", "E00000"), ("d2", "Z1"), ("d3", "Q1"))
     val links = (hot ++ other).toDF("doc_id", "entity_id")
     val sets = links.groupBy("doc_id")
       .agg(collect_set(col("entity_id")).as("es"))
-    val edges = KgPipeline.starEdges(sets)
-    assert(edges.count() == (k - 1) + 1 + 0,
+    val pairs = KgPipeline.starPairs(sets)
+    assert(pairs.filter(col("src") =!= col("dst")).count() == (k - 1) + 1 + 0,
       "star edge count must be linear in per-doc entity count")
+    // self-pairs: E00000 (hub of d-hot and d2, once after the distinct), Q1
+    assert(pairs.filter(col("src") === col("dst")).count() == 2)
     val got = KgPipeline.canonMap(spark, links, Seq("doc_id"))
       .as[(String, String)].collect().toMap
     assert(got.size == k + 2)
@@ -274,52 +276,47 @@ class CacheLinkCcSpec extends AnyFunSuite {
     assert(got("Q1") == "Q1")
   }
 
-  test("O2: retention keeps exactly K most recent; partitioned variant covers all buckets") {
+  test("O2: retention keeps exactly K most recent") {
     val rows = (1 to 500).map(i => (f"k$i%04d", s"sent $i", Seq.empty[graft.model.Entity], i.toLong))
       .toDF("k", "sentence", "entities", "ingest_ts")
     val kept = TagCache.retention(rows, 100)
     assert(kept.count() == 100)
     assert(kept.agg(min("ingest_ts")).as[Long].collect().head == 401L)
-    val keptP = TagCache.retentionPartitioned(rows, 3)
-    val perBucket = keptP.groupBy(substring(col("k"), 1, 2)).count()
-      .as[(String, Long)].collect()
-    assert(perBucket.forall(_._2 <= 3))
   }
 
   test("J1 bucketed cache: join-back shuffles only the probe side; results identical") {
-    val docs = Fixtures.docsDf(80)
-    val sentences = KgPipeline.sentences(docs)
-    val withKey = TagCache.keyed(sentences)
-    val cacheRows = tagger(withKey.select("k", "sentence").dropDuplicates("k"))
-      .select(col("k"), col("sentence"), col("entities"))
-      .withColumn("ingest_ts", lit(0L))
-    TagCache.writeBucketedCache(cacheRows, "tag_cache_bucketed", buckets = 8)
-
-    // at test scale the planner rightly broadcasts the tiny cache; disable
-    // broadcast to surface the shuffle structure a production-sized cache
-    // would see — the bucketed (cache) side must be exchange-free: bucket
-    // layout IS the partitioning, so only the probe side shuffles
-    val joined = TagCache.joinBucketedCache(spark, withKey, "tag_cache_bucketed")
+    // the j1_bucketed_cache gate's own query. At fixture scale the planner
+    // broadcasts the small cache (and drops its buckets); broadcast off
+    // surfaces the plan a production-sized cache gets — the bucketed
+    // (cache) side must be exchange-free: its bucket layout IS the
+    // partitioning, so only the probe side shuffles
+    val dir = "/root/testdata/sf0.001"
+    val gate = SparkEntry.queries("j1_bucketed_cache")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val big = TagCache.joinBucketedCache(spark, withKey, "tag_cache_bucketed")
+    val viaBucket = try {
+      val big = gate(spark, dir)
       val plan = big.queryExecution.executedPlan.toString
       val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
       assert(exchanges <= 1, s"expected at most the probe-side exchange, got:\n$plan")
       assert(plan.contains("Bucketed: true"),
         s"cache side must scan bucketed:\n$plan")
+      big.as[(Long, String, Long)].collect().toSeq
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
-    // row-identical to the plain-path join
-    val viaPath = withKey.join(
-        cacheRows.select("k", "entities"), Seq("k"), "left")
-      .select(col("repo"), col("path"), col("sent_idx"), size(col("entities")))
-      .as[(String, String, Int, Int)].collect().sorted.toSeq
-    val viaBucket = joined
-      .select(col("repo"), col("path"), col("sent_idx"), size(col("entities")))
-      .as[(String, String, Int, Int)].collect().sorted.toSeq
-    assert(viaBucket == viaPath)
+    // row-identical to a plain join of the same inputs: the probe keys and
+    // the cache table's rows as a local relation
+    val cacheRows = spark.table("graft_bucketed_cache")
+      .select("k", "cached_doc").as[(String, Long)].collect().toSeq
+      .toDF("k", "cached_doc")
+    val viaPlain = graft.sources.Tables.documents(spark, dir)
+      .select(col("doc_id"), graft.functions.Text.sha256Hex(col("text")).as("k"))
+      .join(cacheRows, Seq("k"), "left")
+      .select(col("doc_id"), col("k"),
+        coalesce(col("cached_doc"), lit(-1L)).as("cached_doc"))
+      .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
+    assert(viaBucket.nonEmpty && viaBucket.exists(_._3 >= 0))
+    assert(viaBucket == viaPlain)
   }
 
   test("J2: ambiguous alias resolved by lang bonus, then entity_id tiebreak") {

@@ -27,14 +27,16 @@ class DedupSimSpec extends AnyFunSuite {
   }
 
   test("minhash: identical docs -> identical signatures; near-dup shares bands; distinct doc does not") {
-    val df = Seq((1L, base), (2L, base), (3L, nearDup), (4L, other)).toDF("doc_id", "t")
-      .select(col("doc_id"), Dedup.shingles(Dedup.tokens(col("t"))).as("sh"))
-    val sigs = df.select(col("doc_id"), Dedup.signature(col("sh")))
+    // the production entry of every dedup gate: native minima, then the
+    // signature and band keys derived from them
+    val df = Dedup.withMinHashes(
+      Seq((1L, base), (2L, base), (3L, nearDup), (4L, other)).toDF("doc_id", "t"), "t")
+    val sigs = df.select(col("doc_id"), Dedup.signatureFromMinhashes(col("mh")))
       .as[(Long, String)].collect().toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) != sigs(4L))
 
-    val bands = df.select(col("doc_id"), explode(Dedup.bandKeys(col("sh"))).as("b"))
+    val bands = df.select(col("doc_id"), explode(Dedup.bandKeysFromMinhashes(col("mh"))).as("b"))
       .as[(Long, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet)
     assert((bands(1L) & bands(2L)).nonEmpty, "exact dup must collide")
     assert((bands(1L) & bands(3L)).nonEmpty, "near dup (1 token of 13) should collide")

@@ -343,6 +343,19 @@ class EndToEndSpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("; "))
   }
 
+  test("Main.parseArgs: <sfDir> <warehouseDir> [--canon], anything else fails with the usage") {
+    import graft.Main.parseArgs
+    assert(parseArgs(Seq("sf", "wh")) == (("sf", "wh", false)))
+    assert(parseArgs(Seq("sf", "wh", "--canon")) == (("sf", "wh", true)))
+    Seq(Seq(), Seq("sf"), Seq("sf", "wh", "--Canon"), Seq("sf", "wh", "-canon"),
+        Seq("sf", "wh", "canon"), Seq("sf", "wh", "--canon", "x"),
+        Seq("--canon", "sf", "wh"), Seq("--canon", "sf"), Seq("sf", "--canon"))
+      .foreach { args =>
+        val e = intercept[IllegalArgumentException](parseArgs(args))
+        assert(e.getMessage == graft.Main.usage, args.mkString(" "))
+      }
+  }
+
   test("Main.sessionConf: a submitted master and partition count win; a bare run gets the defaults") {
     import org.apache.spark.SparkConf
     val submitted = new SparkConf(false)
