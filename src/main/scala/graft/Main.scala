@@ -112,31 +112,28 @@ object Main {
     * it on a shared session). Returns the triple count: the `rows` of the
     * committed `triples` manifest, which `writeStage` counted from the
     * committed snapshot, so a resume re-scans nothing. Every stage is
-    * fingerprinted with the corpus fingerprint; a fresh resume runs one
-    * Spark job, the fingerprint scan.
+    * fingerprinted with the corpus fingerprint. Stages are opened on
+    * demand: a stage is read or computed only when a downstream stage's
+    * computation needs it, so a cold build forces every stage in order,
+    * and a fresh resume reads the `triples` manifest alone, opens no
+    * snapshot and runs one Spark job, the fingerprint scan. A stale stage
+    * whose consumer is fresh stays as it is (make-style).
     */
   def run(spark: SparkSession, sfDir: String, warehouse: String,
       canon: Boolean): Long = {
     val docs = Tables.docsDf(spark, sfDir)
     val corpusFp = Main.corpusFingerprint(docs)
+    val part = Seq("repo", "lang")
+    def stage(name: String, cols: Seq[String])(compute: => DataFrame) =
+      Manifest.runStage(spark, warehouse, name, cols, corpusFp)(compute)
 
-    val docsCommitted = Manifest.runStage(spark, warehouse, "docs",
-      Seq("repo", "lang"), corpusFp)(docs)
-
-    val mentions = Manifest.runStage(spark, warehouse, "mentions",
-      Seq("repo", "lang"), corpusFp) {
+    lazy val docsCommitted = stage("docs", part)(docs)
+    lazy val mentions = stage("mentions", part) {
       KgPipeline.sentenceMentions(docsCommitted)
     }
-
-    val links = Manifest.runStage(spark, warehouse, "links",
-      Seq("repo", "lang"), corpusFp) {
-      KgPipeline.links(spark, mentions)
-    }
-
-    val canonMap = if (canon) Some(
-      Manifest.runStage(spark, warehouse, "canon_map", Seq.empty, corpusFp) {
-        KgPipeline.canonMap(spark, links)
-      }) else None
+    lazy val links = stage("links", part)(KgPipeline.links(spark, mentions))
+    lazy val canonMap = Option.when(canon)(
+      stage("canon_map", Seq.empty)(KgPipeline.canonMap(spark, links)))
 
     // The GLOBAL distinct (the default, not assumeUniqueDocs) deliberately:
     // `links` here is the COMMITTED snapshot, and a committed file
@@ -144,10 +141,9 @@ object Main {
     // rows can span read partitions — the co-partitioned-duplicates
     // contract LocalDistinct needs does not hold on snapshot reads, only
     // on the in-memory narrow lineage.
-    Manifest.runStage(spark, warehouse, "triples",
-      Seq("repo", "lang"), corpusFp) {
-      KgPipeline.linkTriples(links, canonMap)
-    }
+    if (Manifest.freshSchema(spark, warehouse, "triples", corpusFp).isEmpty)
+      Manifest.writeStage(spark, KgPipeline.linkTriples(links, canonMap),
+        warehouse, "triples", part, corpusFp)
 
     Manifest.committedRows(spark, warehouse, "triples")
   }

@@ -19,8 +19,11 @@ import graft.JsonUtil
   * the committed relation's schema) lands last; [[runStage]] recomputes
   * only when no manifest exists, the input fingerprint changed, the
   * manifest carries no schema (one written before the field existed), or
-  * it does not parse. [[graft.JsonUtil]]'s jackson mapper writes and reads
-  * it.
+  * it does not parse — the one check, [[freshSchema]], which reads the
+  * manifest alone. [[graft.JsonUtil]]'s jackson mapper writes and reads
+  * it. Callers open stages on demand: [[graft.Main.run]] checks the last
+  * stage first and opens an upstream stage only to recompute from it, so
+  * a fresh resume opens no snapshot.
   *
   * Like an Iceberg snapshot's metadata, the manifest carries the schema,
   * so a stage read infers nothing: no footer-reading schema-inference job,
@@ -119,12 +122,6 @@ object Manifest {
   private def text(m: JsonNode, key: String): Option[String] =
     Option(m.get(key)).filter(_.isTextual).map(_.textValue)
 
-  /** The top-level `input_fingerprint` field; `None` for a manifest that
-    * does not parse (the stage then recomputes).
-    */
-  private[graft] def readFingerprint(manifest: String): Option[String] =
-    JsonUtil.parse(manifest).flatMap(text(_, "input_fingerprint"))
-
   /** The committed row total of `stage`, from its manifest (no scan). */
   def committedRows(spark: SparkSession, warehouse: String, stage: String): Long =
     readManifest(spark, warehouse, stage).flatMap(JsonUtil.parse)
@@ -141,18 +138,27 @@ object Manifest {
         case s: StructType => s
       })
 
-  /** Run-or-resume: if the stage has a committed manifest whose input
-    * fingerprint matches, read the committed data with the manifest's
-    * schema; otherwise compute, commit, and return the committed relation
-    * (so downstream stages read the snapshot, not the lineage). Neither
-    * path launches a schema-inference job.
+  /** The freshness check: the committed schema of `stage` when its
+    * manifest parses, its top-level `input_fingerprint` field equals
+    * `inputFingerprint` and it carries a schema; `None` (recompute)
+    * otherwise, never a throw. Reads the manifest only, no snapshot.
+    */
+  def freshSchema(spark: SparkSession, warehouse: String, stage: String,
+      inputFingerprint: String): Option[StructType] =
+    readManifest(spark, warehouse, stage).flatMap(JsonUtil.parse)
+      .filter(m => text(m, "input_fingerprint").contains(inputFingerprint))
+      .flatMap(readSchema)
+
+  /** Run-or-resume: if [[freshSchema]] finds the stage fresh, read the
+    * committed data with the manifest's schema; otherwise compute, commit,
+    * and return the committed relation (so downstream stages read the
+    * snapshot, not the lineage). Neither path launches a schema-inference
+    * job.
     */
   def runStage(spark: SparkSession, warehouse: String, stage: String,
       partitionCols: Seq[String], inputFingerprint: String)
       (compute: => DataFrame): DataFrame =
-    readManifest(spark, warehouse, stage).flatMap(JsonUtil.parse)
-      .filter(m => text(m, "input_fingerprint").contains(inputFingerprint))
-      .flatMap(readSchema) match {
+    freshSchema(spark, warehouse, stage, inputFingerprint) match {
       case Some(schema) =>
         spark.read.schema(schema).parquet(s"$warehouse/$stage")
       case None =>

@@ -416,25 +416,44 @@ class CacheLinkCcSpec extends AnyFunSuite {
   }
 
   test("manifest fingerprint is FIELD-parsed: colliding substring elsewhere doesn't read fresh") {
+    // The freshness check runStage and Main.run call, over manifests
+    // written by hand. Each carries a valid schema, so a None below comes
+    // from the fingerprint field (or a parse failure), not a missing schema.
+    val wh = tmpDir("warehouse-fp")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("p STRING")
+    val schemaField = s""","schema":${graft.JsonUtil.str(schema.json)}}"""
+    def fresh(manifest: String, fp: String) = {
+      val p = java.nio.file.Paths.get(Manifest.manifestPath(wh, "s"))
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.write(p, manifest.getBytes("UTF-8"))
+      Manifest.freshSchema(spark, wh, "s", fp)
+    }
     // a partition value that CONTAINS an escaped fingerprint-like blob must
     // not satisfy the freshness check for that blob; the real field must.
     val manifest = """{"stage":"s","rows":1,""" +
       """"input_fingerprint":"fp-REAL",""" +
       """"partition_cols":["p"],""" +
-      """"partitions":[{"partition":"x\"input_fingerprint\":\"fp-FAKE\"","rows":1}]}"""
-    assert(Manifest.readFingerprint(manifest).contains("fp-REAL"))
+      """"partitions":[{"partition":"x\"input_fingerprint\":\"fp-FAKE\"","rows":1}]""" +
+      schemaField
+    assert(fresh(manifest, "fp-REAL").contains(schema))
+    assert(fresh(manifest, "fp-FAKE").isEmpty)
     // escaped value round-trips
-    val esc = """{"input_fingerprint":"a\"b\\c"}"""
-    assert(Manifest.readFingerprint(esc).contains("a\"b\\c"))
+    val esc = """{"input_fingerprint":"a\"b\\c"""" + schemaField
+    assert(fresh(esc, "a\"b\\c").contains(schema))
     // a corrupt manifest (a truncated or invalid \u escape, or an empty
-    // file) does not parse: it has no fingerprint, and reading it does not
-    // throw (the stage then recomputes)
-    assert(Manifest.readFingerprint("{\"input_fingerprint\":\"x\\u004\"}").isEmpty)
-    assert(Manifest.readFingerprint("{\"input_fingerprint\":\"x\\uZZZZy\"}").isEmpty)
-    assert(Manifest.readFingerprint("").isEmpty)
+    // file) does not parse: it is not fresh for any reading of the
+    // garbled value, and checking it does not throw (the stage then
+    // recomputes)
+    val truncated = "{\"input_fingerprint\":\"x\\u004\"" + schemaField
+    val invalid = "{\"input_fingerprint\":\"x\\uZZZZy\"" + schemaField
+    for (fp <- Seq("xu004", "x\\u004", "x\u0004", "x"))
+      assert(fresh(truncated, fp).isEmpty, fp)
+    for (fp <- Seq("xuZZZZy", "x\\uZZZZy", "x"))
+      assert(fresh(invalid, fp).isEmpty, fp)
+    assert(fresh("", "").isEmpty)
+    assert(Manifest.freshSchema(spark, wh, "none", "fp-REAL").isEmpty)
 
-    // end-to-end: a fingerprint equal to the FAKE blob must recompute
-    val wh = tmpDir("warehouse-fp")
+    // end-to-end: a fingerprint change must recompute
     var computes = 0
     def stage(): DataFrame = { computes += 1; Fixtures.docsDf(10) }
     Manifest.runStage(spark, wh, "d", Seq("lang"), "fp-1")(stage())

@@ -321,6 +321,34 @@ class EndToEndSpec extends AnyFunSuite {
     assert(jobs.size == 1, s"a resume reads metadata only; got jobs $jobs")
   }
 
+  test("Main.run: a fresh resume opens no upstream stage") {
+    // Stages open on demand: with `triples` fresh, nothing reads (or
+    // recomputes) the stages upstream of it, even when they are gone.
+    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
+    val cold = graft.Main.run(spark, dir, wh, canon = true)
+    val gone = Seq("docs", "mentions").map(s => new java.io.File(s"$wh/$s"))
+    gone.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    val (n, jobs) = Fixtures.jobsDuring(spark)(graft.Main.run(spark, dir, wh, canon = true))
+    assert(n == cold)
+    assert(jobs.size == 1, s"a resume runs the fingerprint scan only; got jobs $jobs")
+    assert(!gone.exists(_.exists), "a fresh resume re-created an upstream stage")
+  }
+
+  test("Main.run: a stale triples recomputes from its fresh inputs only") {
+    import graft.pipeline.Manifest
+    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
+    val cold = graft.Main.run(spark, dir, wh, canon = true)
+    val before = Seq("triples", "links", "canon_map")
+      .map(s => s -> Manifest.readManifest(spark, wh, s).get).toMap
+    new java.io.File(Manifest.manifestPath(wh, "triples")).delete()
+    val gone = Seq("docs", "mentions").map(s => new java.io.File(s"$wh/$s"))
+    gone.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    assert(graft.Main.run(spark, dir, wh, canon = true) == cold)
+    val after = before.keys.map(s => s -> Manifest.readManifest(spark, wh, s).get).toMap
+    assert(after == before, "triples must be rewritten byte for byte, links and canon_map kept")
+    assert(!gone.exists(_.exists), "a fresh input stage's own inputs were recomputed")
+  }
+
   test("Tables.events: the declared schema is every sf table's, and a read launches no job") {
     // Covers every table, not only events: each reads through Tables.read.
     val root = new java.io.File(dir).getParent
