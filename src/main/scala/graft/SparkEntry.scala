@@ -122,6 +122,11 @@ object SparkEntry {
   private val hotBandCopies = Dedup.maxBucket + 6
   private val hotBandIdBase = 1000000L
 
+  // O2's K. At sf0.01 the four newest UTC days hold 1,335 events and the
+  // fifth 326, so the cut lands inside that day: 1,335 rows come from
+  // retention's full-stamp branch and 165 from its tie-break branch.
+  private val retentionKeep = 1500
+
   private def hotBandCorpus(s: SparkSession, dir: String): DataFrame = {
     val base = cleanedDocs(s, dir).select("doc_id", "cleaned")
     val boiler = base.filter(col("doc_id") === 1)
@@ -633,19 +638,23 @@ object SparkEntry {
       Some(canonSqlDuck)),
 
     // ---- O2: retention top-K by recency (ner-clean-cache.sh:9) ----------
+    // The events table as a tag cache: key = event_id, ingest stamp = the
+    // UTC day bucket the stream gates use. The gate runs the library's
+    // histogram top-K itself; the oracle is the one-window definition.
     QuerySpec("o2_retention",
       (s, dir) => {
-        val w = Window.partitionBy(col("event_type"))
-          .orderBy(col("ts").desc, col("event_id").desc)
-        Tables.events(s, dir)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 100)
-          .select("event_type", "event_id", "rn")
-          .orderBy("event_type", "rn")
+        val cache = Tables.events(s, dir).select(
+          col("event_id").as(TagCache.keyCol),
+          floor(unix_millis(col("ts").cast("timestamp")) / lit(86400000.0))
+            .cast("long").as("ingest_ts"))
+        TagCache.retention(cache, retentionKeep)
+          .select(col(TagCache.keyCol).as("event_id"), col("ingest_ts").as("d"))
+          .orderBy(col("d").desc, col("event_id"))
       },
-      Some("SELECT event_type, event_id, rn FROM (SELECT event_type, event_id, " +
-        "row_number() OVER (PARTITION BY event_type ORDER BY ts DESC, event_id DESC) AS rn " +
-        "FROM events) w WHERE rn <= 100 ORDER BY event_type, rn")),
+      Some("SELECT event_id, d FROM (SELECT event_id, d, " +
+        "row_number() OVER (ORDER BY d DESC, event_id) AS rn FROM " +
+        "(SELECT event_id, CAST(floor(epoch_ms(ts)/86400000.0) AS BIGINT) AS d " +
+        s"FROM events) e) w WHERE rn <= $retentionKeep ORDER BY d DESC, event_id")),
 
     // ---- O3: deterministic stratified split (notebook cells 10-13) ------
     QuerySpec("o3_strat_split",

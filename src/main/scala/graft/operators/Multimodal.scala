@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import javax.imageio.{ImageIO, ImageReader}
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media payloads are opaque `binary` columns
@@ -113,29 +115,41 @@ object Multimodal {
     }
   }
 
-  /** Batch decode with `javax.imageio`: one reader per partition,
-    * iterator-in / iterator-out (the mapInPandas batch shape). Input must
-    * carry (doc_id:long, payload:binary).
+  /** `decode` over every (doc_id, payload) row of `df`: one `format`
+    * ImageReader per partition (iterator-in / iterator-out, the
+    * mapInPandas batch shape), set on each payload's ImageInputStream,
+    * which is closed even when the decode throws.
     */
-  def decodeMeta(spark: SparkSession, df: DataFrame): Dataset[MediaMeta] = {
+  private def decodeEach[T: Encoder](spark: SparkSession, df: DataFrame,
+      format: String)(decode: (Long, Array[Byte], ImageReader) => T)
+      : Dataset[T] = {
     import spark.implicits._
     df.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
-        // per-partition codec init: one reusable BMP ImageReader
-        val reader = javax.imageio.ImageIO
-          .getImageReadersByFormatName("bmp").next()
+        val reader = ImageIO.getImageReadersByFormatName(format).next()
         onExhaustion(it.map { case (id, bytes) =>
-          val iis = javax.imageio.ImageIO.createImageInputStream(
+          val iis = ImageIO.createImageInputStream(
             new java.io.ByteArrayInputStream(bytes))
-          reader.setInput(iis)
-          val nFrames = reader.getNumImages(true)
-          val img = reader.read(0)
-          iis.close()
-          val hdr = bytes.take(8).map("%02x".format(_)).mkString
-          MediaMeta(id, bytes.length.toLong, hdr, img.getWidth, img.getHeight,
-            nFrames)
+          try {
+            reader.setInput(iis)
+            decode(id, bytes, reader)
+          } finally iis.close()
         })(reader.dispose())
       }
+  }
+
+  /** Batch decode with `javax.imageio` ([[decodeEach]]). Input must carry
+    * (doc_id:long, payload:binary).
+    */
+  def decodeMeta(spark: SparkSession, df: DataFrame): Dataset[MediaMeta] = {
+    import spark.implicits._
+    decodeEach(spark, df, "bmp") { (id, bytes, reader) =>
+      val nFrames = reader.getNumImages(true)
+      val img = reader.read(0)
+      val hdr = bytes.take(8).map("%02x".format(_)).mkString
+      MediaMeta(id, bytes.length.toLong, hdr, img.getWidth, img.getHeight,
+        nFrames)
+    }
   }
 
   // ---- image resize (decode -> nearest-neighbor downsample -> re-encode) --
@@ -195,59 +209,50 @@ object Multimodal {
     */
   def resizeHalf(spark: SparkSession, df: DataFrame): Dataset[ResizedMeta] = {
     import spark.implicits._
-    df.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val reader = javax.imageio.ImageIO
-          .getImageReadersByFormatName("bmp").next()
-        onExhaustion(it.map { case (id, bytes) =>
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          reader.setInput(iis)
-          val img = reader.read(0)
-          iis.close()
-          val w = img.getWidth
-          val w2 = math.max(1, img.getWidth / 2)
-          val h2 = math.max(1, img.getHeight / 2)
-          val scaled = new java.awt.image.BufferedImage(w2, h2,
-            java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-          // NN sample (x, y) <- (2x, 2y): when both rasters are canonical
-          // 3-byte BGR, move the 3 pixel bytes directly — same values as
-          // the setRGB/getRGB pair, minus two color-model conversions per
-          // pixel (BENCH.md §18); fallback for other source layouts.
-          (img.getRaster.getDataBuffer, scaled.getRaster.getDataBuffer) match {
-            case (sb: java.awt.image.DataBufferByte,
-                db: java.awt.image.DataBufferByte)
-                if img.getType == java.awt.image.BufferedImage.TYPE_3BYTE_BGR &&
-                  sb.getData.length == w * img.getHeight * 3 =>
-              val src = sb.getData
-              val dst = db.getData
-              var y = 0
-              while (y < h2) {
-                var x = 0
-                while (x < w2) {
-                  val s = (y * 2 * w + x * 2) * 3
-                  val d = (y * w2 + x) * 3
-                  dst(d) = src(s); dst(d + 1) = src(s + 1); dst(d + 2) = src(s + 2)
-                  x += 1
-                }
-                y += 1
-              }
-            case _ =>
-              var y = 0
-              while (y < h2) {
-                var x = 0
-                while (x < w2) {
-                  scaled.setRGB(x, y, img.getRGB(x * 2, y * 2))
-                  x += 1
-                }
-                y += 1
-              }
+    decodeEach(spark, df, "bmp") { (id, _, reader) =>
+      val img = reader.read(0)
+      val w = img.getWidth
+      val w2 = math.max(1, img.getWidth / 2)
+      val h2 = math.max(1, img.getHeight / 2)
+      val scaled = new java.awt.image.BufferedImage(w2, h2,
+        java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+      // NN sample (x, y) <- (2x, 2y): when both rasters are canonical
+      // 3-byte BGR, move the 3 pixel bytes directly — same values as
+      // the setRGB/getRGB pair, minus two color-model conversions per
+      // pixel (BENCH.md §18); fallback for other source layouts.
+      (img.getRaster.getDataBuffer, scaled.getRaster.getDataBuffer) match {
+        case (sb: java.awt.image.DataBufferByte,
+            db: java.awt.image.DataBufferByte)
+            if img.getType == java.awt.image.BufferedImage.TYPE_3BYTE_BGR &&
+              sb.getData.length == w * img.getHeight * 3 =>
+          val src = sb.getData
+          val dst = db.getData
+          var y = 0
+          while (y < h2) {
+            var x = 0
+            while (x < w2) {
+              val s = (y * 2 * w + x * 2) * 3
+              val d = (y * w2 + x) * 3
+              dst(d) = src(s); dst(d + 1) = src(s + 1); dst(d + 2) = src(s + 2)
+              x += 1
+            }
+            y += 1
           }
-          val outBytes = encodeBmpFromImage(scaled)
-          ResizedMeta(id, img.getWidth, img.getHeight, w2, h2,
-            outBytes.length.toLong)
-        })(reader.dispose())
+        case _ =>
+          var y = 0
+          while (y < h2) {
+            var x = 0
+            while (x < w2) {
+              scaled.setRGB(x, y, img.getRGB(x * 2, y * 2))
+              x += 1
+            }
+            y += 1
+          }
       }
+      val outBytes = encodeBmpFromImage(scaled)
+      ResizedMeta(id, img.getWidth, img.getHeight, w2, h2,
+        outBytes.length.toLong)
+    }
   }
 
   // ---- pixel-level feature extraction (decode -> channel-byte sum) --------
@@ -275,45 +280,36 @@ object Multimodal {
     */
   def pixelStats(spark: SparkSession, df: DataFrame): Dataset[PixelStats] = {
     import spark.implicits._
-    df.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val reader = javax.imageio.ImageIO
-          .getImageReadersByFormatName("bmp").next()
-        onExhaustion(it.map { case (id, bytes) =>
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          reader.setInput(iis)
-          val img = reader.read(0)
-          iis.close()
-          // channel-byte sum: when the reader hands back a 3-byte raster
-          // (the JDK BMP reader's shape for 24-bpp), sum the backing array
-          // directly — per-pixel getRGB pays a color-model conversion per
-          // call (the same hot spot the GIF encoder had, BENCH.md §18);
-          // any other layout falls back to the per-pixel path. Both sum
-          // r+g+b per pixel, so the value is identical (oracle-pinned).
-          var sum = 0L
-          img.getRaster.getDataBuffer match {
-            case b: java.awt.image.DataBufferByte
-                if img.getType == java.awt.image.BufferedImage.TYPE_3BYTE_BGR &&
-                  b.getData.length == img.getWidth * img.getHeight * 3 =>
-              val data = b.getData
-              var i = 0
-              while (i < data.length) { sum += data(i) & 0xff; i += 1 }
-            case _ =>
-              var y = 0
-              while (y < img.getHeight) {
-                var x = 0
-                while (x < img.getWidth) {
-                  val rgb = img.getRGB(x, y)
-                  sum += (rgb & 0xff) + ((rgb >> 8) & 0xff) + ((rgb >> 16) & 0xff)
-                  x += 1
-                }
-                y += 1
-              }
+    decodeEach(spark, df, "bmp") { (id, _, reader) =>
+      val img = reader.read(0)
+      // channel-byte sum: when the reader hands back a 3-byte raster
+      // (the JDK BMP reader's shape for 24-bpp), sum the backing array
+      // directly — per-pixel getRGB pays a color-model conversion per
+      // call (the same hot spot the GIF encoder had, BENCH.md §18);
+      // any other layout falls back to the per-pixel path. Both sum
+      // r+g+b per pixel, so the value is identical (oracle-pinned).
+      var sum = 0L
+      img.getRaster.getDataBuffer match {
+        case b: java.awt.image.DataBufferByte
+            if img.getType == java.awt.image.BufferedImage.TYPE_3BYTE_BGR &&
+              b.getData.length == img.getWidth * img.getHeight * 3 =>
+          val data = b.getData
+          var i = 0
+          while (i < data.length) { sum += data(i) & 0xff; i += 1 }
+        case _ =>
+          var y = 0
+          while (y < img.getHeight) {
+            var x = 0
+            while (x < img.getWidth) {
+              val rgb = img.getRGB(x, y)
+              sum += (rgb & 0xff) + ((rgb >> 8) & 0xff) + ((rgb >> 16) & 0xff)
+              x += 1
+            }
+            y += 1
           }
-          PixelStats(id, sum, img.getWidth.toLong * img.getHeight * 3)
-        })(reader.dispose())
       }
+      PixelStats(id, sum, img.getWidth.toLong * img.getHeight * 3)
+    }
   }
 
   /** DuckDB fragment: sum of the hex-seeded pixel-data bytes for a doc of
@@ -429,32 +425,23 @@ object Multimodal {
     */
   def decodeVideoMeta(spark: SparkSession, df: DataFrame): Dataset[VideoMeta] = {
     import spark.implicits._
-    df.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val reader = javax.imageio.ImageIO
-          .getImageReadersByFormatName("gif").next()
-        onExhaustion(it.map { case (id, bytes) =>
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          reader.setInput(iis)
-          val n = reader.getNumImages(true)
-          // stride-2 temporal subsample: frames 0, 2, 4, ... (decode each
-          // kept frame — a real per-frame codec pass, not arithmetic; the
-          // dims come from the first kept frame's decode, so frame 0 is
-          // read exactly once, not once for dims plus once in the loop)
-          var w0, h0 = 0
-          var kept = 0
-          var f = 0
-          while (f < n) {
-            val img = reader.read(f)
-            if (f == 0) { w0 = img.getWidth; h0 = img.getHeight }
-            kept += 1
-            f += 2
-          }
-          iis.close()
-          VideoMeta(id, n, w0, h0, kept)
-        })(reader.dispose())
+    decodeEach(spark, df, "gif") { (id, _, reader) =>
+      val n = reader.getNumImages(true)
+      // stride-2 temporal subsample: frames 0, 2, 4, ... (decode each
+      // kept frame — a real per-frame codec pass, not arithmetic; the
+      // dims come from the first kept frame's decode, so frame 0 is
+      // read exactly once, not once for dims plus once in the loop)
+      var w0, h0 = 0
+      var kept = 0
+      var f = 0
+      while (f < n) {
+        val img = reader.read(f)
+        if (f == 0) { w0 = img.getWidth; h0 = img.getHeight }
+        kept += 1
+        f += 2
       }
+      VideoMeta(id, n, w0, h0, kept)
+    }
   }
 
   // ---- audio (WAV / javax.sound.sampled) -----------------------------------

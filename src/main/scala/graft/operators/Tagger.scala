@@ -106,22 +106,12 @@ object Tagger {
     * formulation. Both paths emit identical rows (spec-pinned, plus the
     * DuckDB oracle which always takes the regex dialect).
     */
-  def tagMentionsWith(ps: Seq[Pattern])(df: DataFrame, textCol: String): DataFrame = {
-    val tagged = graft.expressions.LiteralScanner.forPatterns(ps) match {
-      case Some(scanner) =>
-        graft.expressions.TagMentions.tag_mentions(col(textCol), scanner)
-      case None =>
-        flatten(array(ps.map { p =>
-          transform(
-            regexp_extract_all(col(textCol), lit(p.regex), lit(p.group)),
-            m => struct(lit(p.label).as("label"),
-              lit(p.confidence).as("confidence"), m.as("mention")))
-        }: _*))
+  def tagMentionsWith(ps: Seq[Pattern])(df: DataFrame, textCol: String): DataFrame =
+    graft.expressions.LiteralScanner.forPatterns(ps) match {
+      case Some(scanner) => explodeTagged(df, textCol,
+        graft.expressions.TagMentions.tag_mentions(col(textCol), scanner))
+      case None => tagMentionsRegex(ps)(df, textCol)
     }
-    df.select(col("*"), explode(tagged).as("e"))
-      .select(col("*"), col("e.label"), col("e.confidence"), col("e.mention"))
-      .drop("e", textCol)
-  }
 
   /** The regexp_extract_all formulation, regardless of pattern shape —
     * the parity twin the literal-scan path is spec-checked against.
@@ -134,10 +124,17 @@ object Tagger {
         m => struct(lit(p.label).as("label"),
           lit(p.confidence).as("confidence"), m.as("mention")))
     }
-    df.select(col("*"), explode(flatten(array(perPattern: _*))).as("e"))
+    explodeTagged(df, textCol, flatten(array(perPattern: _*)))
+  }
+
+  /** One row per element of `tagged` (an array of (label, confidence,
+    * mention) structs), with `textCol` dropped.
+    */
+  private def explodeTagged(df: DataFrame, textCol: String,
+      tagged: Column): DataFrame =
+    df.select(col("*"), explode(tagged).as("e"))
       .select(col("*"), col("e.label"), col("e.confidence"), col("e.mention"))
       .drop("e", textCol)
-  }
 
   // ---- U3 twin: deterministic TextClassifier (flair sentiment analogue) --
 

@@ -1,7 +1,11 @@
 package graft.tools
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+
+import org.apache.spark.sql.graft.ListenerBusBridge
 
 import graft.operators.ConnectedComponents
 
@@ -12,7 +16,7 @@ import graft.operators.ConnectedComponents
   * to exercise the distributed loop on the SAME small graph — so the one
   * thing no gate measures is the loop on a graph genuinely ABOVE the 2M
   * default guard, the regime a 100 TB corpus' co-occurrence graph
-  * actually lives in. This main synthesizes one deterministically
+  * actually lives in. This tool synthesizes one deterministically
   * (distributively — the graph never touches the driver during
   * generation), lets `runAuto` overflow its probe and fall back to the
   * pointer-doubling loop, checks the full component map against the
@@ -38,18 +42,12 @@ import graft.operators.ConnectedComponents
   * Ids are zero-padded to 10 chars (the `dedup_clusters` convention) so
   * numeric and lexicographic order agree.
   *
-  * Usage:
-  * `sbt -batch "runMain graft.tools.CcScale [edgesTarget] [groupSize] [shape]"`
-  * (defaults 6,000,000 / 2048 / chain); `SPARK_GRAFT_CPUS` sets
-  * parallelism.
+  * Run through `graft.tools.Measure cc [edgesTarget] [groupSize] [shape]`,
+  * which parses and checks the arguments.
   */
 object CcScale {
-  def main(args: Array[String]): Unit = {
-    val edgesTarget = args.headOption.map(_.toLong).getOrElse(6_000_000L)
-    val groupSize = args.drop(1).headOption.map(_.toLong).getOrElse(2048L)
-    val shape = args.drop(2).headOption.getOrElse("chain")
-    require(groupSize > 1, "groupSize must be >= 2")
-    require(shape == "chain" || shape == "star", s"unknown shape '$shape'")
+  def run(spark: SparkSession, edgesTarget: Long, groupSize: Long,
+      shape: String): Unit = {
     // chain contributes (groupSize-1) chain + groupSize/16 shortcut edges
     // per group, a star (groupSize-1) spokes; solve for the group count
     // that lands near the target
@@ -58,16 +56,7 @@ object CcScale {
       else (groupSize - 1) + groupSize / 16
     val numGroups = math.max(1L, edgesTarget / perGroup)
     val v = numGroups * groupSize
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sc = spark.sparkContext
 
     def fmt(c: Column): Column = format_string("%010d", c)
     val base = spark.range(v).toDF("i")
@@ -90,8 +79,8 @@ object CcScale {
       }
     val edges = raw.select(fmt(col("a")).as("src"), fmt(col("b")).as("dst"))
     val nEdges = edges.count()
-    println(s"[ccscale] cpus=$cpus shape=$shape edges=$nEdges vertices=$v " +
-      s"groups=$numGroups groupSize=$groupSize")
+    println(s"[ccscale] cpus=${sc.defaultParallelism} shape=$shape " +
+      s"edges=$nEdges vertices=$v groups=$numGroups groupSize=$groupSize")
 
     // distributed path via the public entry: the probe overflows the 2M
     // guard and run()'s pointer-doubling loop executes (assert it did).
@@ -106,17 +95,21 @@ object CcScale {
     val stages = new java.util.concurrent.atomic.AtomicLong
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
     val execRunTime = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         shuffleWrite.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
         execRunTime.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
       }
     }
-    spark.sparkContext.addSparkListener(listener)
+    // drain the async listener bus before attaching, so no earlier job
+    // (the edge count above) is counted, and after the run, so no tail
+    // event of the CC run is lost before detaching (the metrics are
+    // published evidence) and the verification scan below isn't counted
+    ListenerBusBridge.drain(sc)
+    sc.addSparkListener(listener)
     val t0 = System.nanoTime()
     val comp = ConnectedComponents.runAuto(spark, edges)
     // time the CC computation alone (the loop runs eagerly and the labels
@@ -124,26 +117,8 @@ object CcScale {
     // ground-truth scan below is verification, not the measured work, and
     // the driver path's timing likewise excludes its verification loop
     val tDist = (System.nanoTime() - t0) / 1e9
-    // let the async listener bus drain the CC run's tail events before
-    // detaching, so the verification scan below isn't counted.
-    // listenerBus.waitUntilEmpty is private[spark], and a FIXED pause can
-    // under-wait after a multi-round 20M-edge run (tail stage events still
-    // queued would silently vanish from the very metrics this tool
-    // publishes) — so poll until the counters stop changing instead.
-    locally {
-      // 6 consecutive stable polls = 3 s of silence: a 1-2 s GC pause or
-      // bus stall must not read as "drained" (the metrics are published
-      // evidence; a 20M-edge run can queue events for seconds)
-      var settled = 0
-      var last = (-1L, -1L, -1L, -1L)
-      val deadline = System.nanoTime() + 120_000_000_000L
-      while (settled < 6 && System.nanoTime() < deadline) {
-        Thread.sleep(500)
-        val now = (jobs.get, stages.get, shuffleWrite.get, execRunTime.get)
-        if (now == last) settled += 1 else { settled = 0; last = now }
-      }
-    }
-    spark.sparkContext.removeSparkListener(listener)
+    ListenerBusBridge.drain(sc)
+    sc.removeSparkListener(listener)
     println(f"[ccscale] listener (CC run only): jobs=${jobs.get} " +
       f"stages=${stages.get} shuffleWriteMB=${shuffleWrite.get / 1048576} " +
       f"execRunTimeS=${execRunTime.get / 1000}")
@@ -160,24 +135,22 @@ object CcScale {
     // SPARK_GRAFT_CC_SKIP_DRIVER=1 skips the driver union-find comparison:
     // at 20M+ edges the collect alone is a multi-GB driver materialization
     // that adds nothing to the loop's ground-truth verification above
-    if (sys.env.get("SPARK_GRAFT_CC_SKIP_DRIVER").contains("1")) {
-      spark.stop(); return
+    if (!sys.env.get("SPARK_GRAFT_CC_SKIP_DRIVER").contains("1")) {
+      // driver union-find on the same edges, timed from collect through
+      // map build — what the guard WOULD do if sized up; memory contract
+      // per runAuto's scaladoc (~rows x id-width x 4: ~0.5 GB at 6M short
+      // ids)
+      val t1 = System.nanoTime()
+      val pairs = edges.select("src", "dst").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+      val scalarMap = ConnectedComponents.runScalar(pairs)
+      val tDrv = (System.nanoTime() - t1) / 1e9
+      val badScalar = scalarMap.iterator.count { case (id, c) =>
+        c != f"${id.toLong / groupSize * groupSize}%010d"
+      }
+      println(f"[ccscale] driver union-find: ${tDrv}%.2f s " +
+        f"(collect+build), mismatches=$badScalar (expected 0)")
+      require(badScalar == 0, "driver union-find diverged from ground truth")
     }
-
-    // driver union-find on the same edges, timed from collect through map
-    // build — what the guard WOULD do if sized up; memory contract per
-    // runAuto's scaladoc (~rows x id-width x 4: ~0.5 GB at 6M short ids)
-    val t1 = System.nanoTime()
-    val pairs = edges.select("src", "dst").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    val scalarMap = ConnectedComponents.runScalar(pairs)
-    val tDrv = (System.nanoTime() - t1) / 1e9
-    val badScalar = scalarMap.iterator.count { case (id, c) =>
-      c != f"${id.toLong / groupSize * groupSize}%010d"
-    }
-    println(f"[ccscale] driver union-find: ${tDrv}%.2f s " +
-      f"(collect+build), mismatches=$badScalar (expected 0)")
-    require(badScalar == 0, "driver union-find diverged from ground truth")
-    spark.stop()
   }
 }

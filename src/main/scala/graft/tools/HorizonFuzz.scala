@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStream
@@ -83,14 +82,7 @@ object HorizonFuzz {
   def main(args: Array[String]): Unit = {
     val iters = args.headOption.map(_.toInt).getOrElse(20)
     val seed = args.drop(1).headOption.map(_.toLong).getOrElse(42L)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Measure.session()
     import spark.implicits._
     val rnd = new scala.util.Random(seed)
     var failures = 0

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.XmlCorpus
 
 /** Randomized prefix-dialect fuzz: kernel vs xpath twin over documents
@@ -13,11 +11,7 @@ object XmlFuzz {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(400)
     val seed = args.lift(1).map(_.toLong).getOrElse(421L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
     import spark.implicits._
 
     val rnd = new scala.util.Random(seed)

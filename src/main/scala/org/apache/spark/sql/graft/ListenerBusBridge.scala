@@ -1,4 +1,4 @@
-package org.apache.spark.graft
+package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
 

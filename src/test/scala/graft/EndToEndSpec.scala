@@ -384,6 +384,28 @@ class EndToEndSpec extends AnyFunSuite {
       }
   }
 
+  test("Measure.parseArgs: time / plans / audit / cc, anything else fails with the usage") {
+    import graft.tools.Measure._
+    assert(parseArgs(Seq("time", "sf", "q1")) == Time("sf", Seq("q1")))
+    assert(parseArgs(Seq("time", "sf", "q1", "q2")) == Time("sf", Seq("q1", "q2")))
+    assert(parseArgs(Seq("plans", "sf", "kg_triples")) == Plans("sf", Seq("kg_triples")))
+    assert(parseArgs(Seq("audit", "sf")) == Audit("sf"))
+    assert(parseArgs(Seq("cc")) == Cc(6000000L, 2048L, "chain"))
+    assert(parseArgs(Seq("cc", "3000000")) == Cc(3000000L, 2048L, "chain"))
+    assert(parseArgs(Seq("cc", "3000000", "64")) == Cc(3000000L, 64L, "chain"))
+    assert(parseArgs(Seq("cc", "3000000", "64", "star")) == Cc(3000000L, 64L, "star"))
+    Seq(Seq(), Seq("sf", "q1"), Seq("Time", "sf", "q1"), Seq("profile", "sf"),
+        Seq("time"), Seq("time", "sf"), Seq("plans", "sf"), Seq("time", "-sf", "q1"),
+        Seq("audit"), Seq("audit", "sf", "extra"), Seq("audit", "--sf"),
+        Seq("cc", "3e6"), Seq("cc", "many"), Seq("cc", "3000000", "big"),
+        Seq("cc", "3000000", "1"), Seq("cc", "3000000", "64", "ring"),
+        Seq("cc", "3000000", "64", "star", "x"))
+      .foreach { args =>
+        val e = intercept[IllegalArgumentException](parseArgs(args))
+        assert(e.getMessage == usage, args.mkString(" "))
+      }
+  }
+
   test("Main.sessionConf: a submitted master and partition count win; a bare run gets the defaults") {
     import org.apache.spark.SparkConf
     val submitted = new SparkConf(false)

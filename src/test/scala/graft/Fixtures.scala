@@ -79,11 +79,11 @@ object Fixtures {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         sites.add(e.stageInfos.maxByOption(_.stageId).fold("")(_.name))
     }
-    org.apache.spark.graft.ListenerBusBridge.drain(sc)
+    org.apache.spark.sql.graft.ListenerBusBridge.drain(sc)
     sc.addSparkListener(listener)
     try {
       val result = body
-      org.apache.spark.graft.ListenerBusBridge.drain(sc)
+      org.apache.spark.sql.graft.ListenerBusBridge.drain(sc)
       (result, sites.toArray(Array.empty[String]).toSeq)
     } finally sc.removeSparkListener(listener)
   }

@@ -136,6 +136,20 @@ class TaggerMiddlewareSpec extends AnyFunSuite {
     assert(viaScan.exists(_.nonEmpty))
   }
 
+  test("U3 custom patterns outside the literal subset take the regexp path") {
+    val ps = Seq(
+      Tagger.Pattern("NUM", "[0-9]+", 0.97),
+      Tagger.Pattern("GPE", "\\b(Dresden)\\b", 0.99, group = 1))
+    assert(graft.expressions.LiteralScanner.forPatterns(ps).isEmpty)
+    val df = Seq((1, "in Dresden 42 and 7"), (2, "none here"), (3, "x9y"))
+      .toDF("id", "t")
+    val got = Tagger.tagMentionsWith(ps)(df, "t")
+    assert(got.columns.toSeq == Seq("id", "label", "confidence", "mention"))
+    assert(got.as[(Int, String, Double, String)].collect().toSet == Set(
+      (1, "NUM", 0.97, "42"), (1, "NUM", 0.97, "7"),
+      (1, "GPE", 0.99, "Dresden"), (3, "NUM", 0.97, "9")))
+  }
+
   test("G4 span kernel == span UDF: rows, spans, and order on boundary-stress text") {
     // TagSpans (the native literal-scan kernel behind g4_spans since r8)
     // against its parity twin tagWithSpansUdf (= per-row tagScalar, real
